@@ -60,11 +60,12 @@ _DRIVER_PRIORITY = [
     # closed at 200/200 in r15, so the three rows-only-by-design
     # estimator keys (order_price_quartiles_approx,
     # customer_rfm_segments_approx, embedding_semdedup — no_oracle
-    # slots by construction; their hash gates live in their
-    # *_fixed/*_approx twins, still in this prefix) rotate OUT for
-    # three oracle-backed lifecycle re-checks covering exactly the
-    # txlog write paths this optimization round touches (CDF
-    # change-file publication, merge-on-read UPDATE). ---
+    # slots by construction) rotate OUT for three oracle-backed
+    # lifecycle re-checks covering exactly the txlog write paths this
+    # optimization round touches (CDF change-file publication,
+    # merge-on-read UPDATE). Of their hash-gated twins only
+    # embedding_semdedup_fixed is in this prefix; the exact
+    # order_price_quartiles and customer_rfm_segments keys are not. ---
     "events_cdf_feed",
     "user_state_merge_cdf_feed",
     "events_dv_update_scan",

@@ -41,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import uuid
 from collections.abc import Sequence
 
@@ -398,7 +399,7 @@ def _snapshot(
     ``version`` (None=latest). Pruned reads and the copy-on-write DML
     kernels need files AND zone maps, the maintenance verbs need byte
     sizes, every reader needs the DELETION VECTORS (merge-on-read
-    position deletes — see :func:`delete_where` ``mode="dv"``), and
+    position deletes — see :func:`delete_where_expr` ``mode="dv"``), and
     mapped reads need the logical→physical column-name map
     (:func:`rename_column` — Delta's column mapping: the schema DDL
     carries LOGICAL names, data files keep their ORIGINAL physical
@@ -712,55 +713,32 @@ def _normalize_struct(st) -> list[list[str]]:
     StructType. Nested field-name case inside the type string is
     PRESERVED: the Arrow-side txtable reader matches names
     case-sensitively, so a case-only nested-name drift must compare
-    unequal here (ADVICE r15 high — ``_normalize_ddl`` lowercases the
-    whole type string and must not be compared against this)."""
+    unequal here."""
     return sorted([f.name.lower(), f.dataType.simpleString()] for f in st.fields)
 
 
-def _normalize_ddl_rt(spark: SparkSession, ddl: str) -> list[list[str]]:
-    """Round-trip normalize of a committed DDL: parse (memoized via
-    :func:`_struct_of`, ~0.02 ms on a hit vs 67 ms for the empty
-    ``createDataFrame`` round trip) and normalize exactly like
-    :func:`_normalize_schema`. This is the comparison the commit-path
-    schema gates use against a live DataFrame — identical semantics to
-    the pre-r15 round-trip gate, including rejecting nested
-    field-name case drift that the all-lowering ``_normalize_ddl``
-    would silently accept."""
-    return _normalize_struct(_struct_of(spark, ddl))
+# a nested struct field name: what sits between '<' or ',' and ':'
+_NESTED_NAME_RE = re.compile(r"(?<=[<,])([^<>,:()]+)(?=:)")
 
 
 def _normalize_ddl(ddl: str) -> list[list[str]]:
-    """Order-insensitive (name, type) pairs from a simpleString DDL,
-    WITHOUT a SparkSession — a depth-aware top-level comma split
-    (nested struct/array/map types carry commas inside <>). Every
-    schema string in this layer is produced by the same simpleString
-    generator, so string-level type comparison is sound. Needed by
-    writers running where no session exists (the Python streaming
-    sink runner is its own process)."""
-    parts: list[str] = []
-    depth, cur = 0, []
-    for ch in ddl:
-        # BOTH bracket families nest commas: struct/array/map use <>,
-        # decimal(p,s) uses () — tracking only one would split
-        # decimal types at top level and let swapped scales compare
-        # equal as a scrambled multiset
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    out = []
-    for field in parts:
-        name, _, typ = field.partition(" ")
-        out.append([name.lower(), typ.strip().lower()])
-    return sorted(out)
+    """:func:`_normalize_struct` of the schema a simpleString DDL
+    names, WITHOUT a SparkSession: top-level names and type keywords
+    fold to lower case, nested struct field names keep theirs (a
+    case-only nested rename is a schema change). Needed by writers
+    running where no session exists (the Python streaming sink runner
+    is its own process), and cheap enough for every commit gate."""
+
+    def typ(t: str) -> str:
+        parts = _NESTED_NAME_RE.split(t)
+        return "".join(
+            p.strip() if i % 2 else p.lower() for i, p in enumerate(parts)
+        )
+
+    return sorted(
+        [name.lower(), re.sub(r"\s*([<>,:()])\s*", r"\1", typ(t))]
+        for name, t in _split_ddl(ddl)
+    )
 
 
 # DDL string → parsed StructType, memoized (r15 optimization round,
@@ -1184,6 +1162,92 @@ def _path_band_disjoint(
     return False
 
 
+def _retry(attempt, max_retries: int):
+    """Run ``attempt()`` — one optimistic read-check-write pass that
+    re-reads the table — until it returns without
+    :class:`CommitConflict`, at most ``max(1, max_retries)`` times;
+    the last conflict propagates to the caller."""
+    n = max(1, max_retries)
+    for i in range(n):
+        try:
+            return attempt()
+        except CommitConflict:
+            if i == n - 1:
+                raise
+
+
+# table properties every commit record carries (like the schema), so
+# resolving them is one _last_commit read and expire_versions' rebase
+# can never orphan them
+_TABLE_PROPS = (
+    "constraints",
+    "partition_by",
+    "column_mapping",
+    "bloom_cols",
+    "stats_cols",
+    "checkpoint_interval",
+)
+
+
+def _carry_props(record: dict, last: dict | None, **override) -> dict:
+    """Copy ``last``'s table properties onto ``record``; an
+    ``override`` replaces the inherited value (an empty one clears
+    it). Empty values are left off the record."""
+    for prop in _TABLE_PROPS:
+        val = override[prop] if prop in override else (last or {}).get(prop)
+        if val:
+            record[prop] = val
+    return record
+
+
+def _publish(
+    table: str,
+    record: dict,
+    arbiter: CommitArbiter | None = None,
+    rebase_bands: dict | str | None = None,
+    staged_touched: frozenset = frozenset(),
+) -> int:
+    """Publish ``record`` as version ``record["version"]`` and run the
+    table's auto-checkpoint; returns the published version. A lost
+    race raises :class:`CommitConflict` — unless ``rebase_bands`` is
+    set and :func:`_appends_disjoint` proves every intervening commit
+    benign, in which case the SAME staged record (data files already
+    written, zero extra Spark jobs) is re-pointed at the advanced head.
+    Bounded: a pathological append storm eventually surfaces the
+    conflict to the caller's retry."""
+    for _ in range(20):
+        version = record["version"]
+        try:
+            (arbiter or _DEFAULT_ARBITER).publish(
+                _log_path(table, version), json.dumps(record)
+            )
+            _maybe_auto_checkpoint(
+                table, version, int(record.get("checkpoint_interval", 0))
+            )
+            return version
+        except CommitConflict as e:
+            new_last = _last_commit(table)
+            new_head = new_last["version"] if new_last else -1
+            if (
+                rebase_bands is None
+                or new_head < version
+                or not _appends_disjoint(
+                    table, version - 1, new_head, rebase_bands,
+                    staged_touched,
+                )
+            ):
+                raise CommitConflict(
+                    f"version {version} of {table} was committed "
+                    "concurrently"
+                ) from e
+            record["version"] = new_head + 1
+            record["ts"] = _next_commit_ts(table, new_last)
+    raise CommitConflict(
+        f"{table}: gave up rebasing past concurrent appends after 20 "
+        "attempts"
+    )
+
+
 def commit(
     df: DataFrame,
     table: str,
@@ -1416,10 +1480,7 @@ def commit(
         # unknown file is a stale or corrupt caller.
         if last is None:
             raise FileNotFoundError(f"{table} has no table to replace into")
-        # memoized round-trip normalize (dict hit after the first
-        # parse; same semantics as the pre-r15 empty-createDataFrame
-        # gate, incl. nested field-name case — ADVICE r15 high)
-        want = _normalize_ddl_rt(df.sparkSession, last["schema"])
+        want = _normalize_ddl(last["schema"])
         if want != _normalize_schema(df):
             raise TypeError(
                 "replace must keep the table schema; use overwrite to "
@@ -1440,7 +1501,7 @@ def commit(
         # identity, same rule as replace (row mutation ≠ evolution)
         if last is None:
             raise FileNotFoundError(f"{table} has no table to mutate")
-        want = _normalize_ddl_rt(df.sparkSession, last["schema"])
+        want = _normalize_ddl(last["schema"])
         if want != _normalize_schema(df):
             raise TypeError(
                 "a dv commit must keep the table schema; use "
@@ -1468,7 +1529,7 @@ def commit(
         schema_ddl = last["schema"]
     if action == "append" and last:
         current = last["schema"]
-        want = _normalize_ddl_rt(df.sparkSession, current)
+        want = _normalize_ddl(current)
         have = _normalize_schema(df)
         if want != have:
             want_by = dict(want)
@@ -1543,7 +1604,6 @@ def commit(
     stats_prop = list(last.get("stats_cols", [])) if last else []
     eff_stats = list(stats_cols or [])
     eff_stats += [c for c in stats_prop if c not in eff_stats]
-    ckpt_iv = int(last.get("checkpoint_interval", 0)) if last else 0
     obs = None
     if constraints:
         from pyspark.sql import Observation
@@ -1699,61 +1759,14 @@ def commit(
         )
     if stats:
         record["stats"] = stats
-    if spec:
-        # the active layout rides EVERY record (like constraints), so
-        # appends inherit it from one tail read and expiry rebases
-        # can never orphan it
-        record["partition_by"] = spec
-    if cmap:
-        record["column_mapping"] = cmap
-    if constraints:
-        # the active constraint set rides EVERY commit record, so
-        # resolution is one _last_commit read and expire_versions'
-        # rebase can never orphan it
-        record["constraints"] = constraints
-    if active_bloom:
-        record["bloom_cols"] = {
-            c: int(v) for c, v in active_bloom.items()
-        }
-    if stats_prop:
-        record["stats_cols"] = stats_prop
-    if ckpt_iv:
-        record["checkpoint_interval"] = ckpt_iv
-    # publish, rebasing past benign (pure-append, band-disjoint)
-    # losses when the caller allows it: each rebase re-points the SAME
-    # staged record — data files already written, zero extra Spark
-    # jobs — at the advanced head. Bounded: a pathological append
-    # storm eventually surfaces the conflict to the caller's retry.
-    for _ in range(20):
-        path = _log_path(table, version)
-        try:
-            (arbiter or _DEFAULT_ARBITER).publish(
-                path, json.dumps(record)
-            )
-            _maybe_auto_checkpoint(table, version, ckpt_iv)
-            return version
-        except CommitConflict as e:
-            new_last = _last_commit(table)
-            new_head = new_last["version"] if new_last else -1
-            if (
-                rebase_bands is None
-                or new_head < version
-                or not _appends_disjoint(
-                    table, version - 1, new_head, rebase_bands,
-                    staged_touched,
-                )
-            ):
-                raise CommitConflict(
-                    f"version {version} of {table} was committed "
-                    "concurrently"
-                ) from e
-            version = new_head + 1
-            record["version"] = version
-            record["ts"] = _next_commit_ts(table, new_last)
-    raise CommitConflict(
-        f"{table}: gave up rebasing past concurrent appends after 20 "
-        "attempts"
+    _carry_props(
+        record,
+        last,
+        partition_by=spec,
+        column_mapping=cmap,
+        bloom_cols={c: int(v) for c, v in active_bloom.items()},
     )
+    return _publish(table, record, arbiter, rebase_bands, staged_touched)
 
 
 def publish_files(
@@ -1821,7 +1834,9 @@ def publish_files(
     # key (by the caller's cache up to seen_through, then by our own
     # scans) — each attempt re-scans only the records beyond it
     scanned_through = seen_through if seen_through is not None else -1
-    for attempt in range(max(1, max_retries)):
+
+    def attempt():
+        nonlocal scanned_through
         last = _last_commit(table)
         version = (last["version"] + 1) if last else 0
         if epoch_key is not None:
@@ -1851,17 +1866,6 @@ def publish_files(
                 raise TypeError(
                     f"staged schema {have} != table schema {want}"
                 )
-        commit_ts = _next_commit_ts(table, last)
-        record = {
-            "version": version,
-            "action": "append",
-            "add": sorted(rels),
-            "schema": last["schema"] if last else schema_ddl,
-            "commit_id": uuid.uuid4().hex,
-            "ts": commit_ts,
-            "meta": meta or {},
-            "sizes": sizes,
-        }
         if last and last.get("column_mapping"):
             # staged files are written by session-less tasks that
             # know only the logical schema; under a live rename map
@@ -1902,18 +1906,24 @@ def publish_files(
                     f"{table} is partitioned by {spec}; staged files "
                     f"{flat} lack the col=value path segments"
                 )
-            record["partition_by"] = spec
-        if last and last.get("constraints"):
-            record["constraints"] = last["constraints"]
-        if last and last.get("bloom_cols"):
-            # table property rides through (the native sink's staged
-            # files predate the option threading — only FUTURE
-            # commit()-written files embed the bloom pages, which is
-            # the same files-written-before-the-property story as
-            # Delta's bloom index)
-            record["bloom_cols"] = last["bloom_cols"]
-        if last and last.get("checkpoint_interval"):
-            record["checkpoint_interval"] = last["checkpoint_interval"]
+        # the native sink's staged files predate the bloom option
+        # threading: only FUTURE commit()-written files embed the
+        # bloom pages — the same files-written-before-the-property
+        # story as Delta's bloom index
+        record = _carry_props(
+            {
+                "version": version,
+                "action": "append",
+                "add": sorted(rels),
+                "schema": last["schema"] if last else schema_ddl,
+                "commit_id": uuid.uuid4().hex,
+                "ts": _next_commit_ts(table, last),
+                "meta": meta or {},
+                "sizes": sizes,
+            },
+            last,
+            partition_by=spec,
+        )
         if last and last.get("stats_cols"):
             # the zone-map property, honored HERE too: footer-derived
             # stats on every staged file (session-less by design), so
@@ -1923,7 +1933,6 @@ def publish_files(
             # of refusing (VERDICT r12 #1 — stat-less native-sink
             # appends made the rebase inert for its motivating
             # workload)
-            record["stats_cols"] = list(last["stats_cols"])
             staged_stats = _collect_stats(
                 table, sorted(rels), last["stats_cols"], spec, {}
             )
@@ -1950,19 +1959,9 @@ def publish_files(
                     ),
                 )
         os.makedirs(os.path.join(table, _LOG_DIR), exist_ok=True)
-        try:
-            _DEFAULT_ARBITER.publish(
-                _log_path(table, version), json.dumps(record)
-            )
-            _maybe_auto_checkpoint(
-                table, version, int(record.get("checkpoint_interval", 0))
-            )
-            return version
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _publish(table, record)
+
+    return _retry(attempt, max_retries)
 
 
 def _partition_values(rel: str) -> dict:
@@ -2434,6 +2433,39 @@ def _zone_disjoint(s: dict | None, lo, hi) -> bool:
     return False
 
 
+def _bands_cond(bands: dict):
+    """The row-level Column of a ``{col: (lo, hi)}`` band dict: the
+    AND of its ``between()``s."""
+    from pyspark.sql import functions as F
+
+    cond = F.lit(True)
+    for c, (lo, hi) in bands.items():
+        cond = cond & F.col(c).between(lo, hi)
+    return cond
+
+
+def _read_pruned(
+    spark: SparkSession,
+    table: str,
+    version: int | None,
+    constraints,
+    cond,
+) -> DataFrame:
+    """THE pruned snapshot read behind every ``read_table_pruned*`` /
+    ``read_table_where`` shape: ``constraints(schema)`` names the
+    (bands, points) the predicate implies, :func:`_band_touched`
+    keeps only the files that can hold a matching row, and ``cond``
+    (a Column) re-applies row-level, so the result is exactly the
+    filtered snapshot."""
+    files, schema, stats, _, dvs, mapping = _snapshot(table, version)
+    bands, points = constraints(schema)
+    kept = _band_touched(
+        table, files, stats, mapping, bands,
+        types=_dtype_map(schema), points=points,
+    )
+    return _scan(spark, table, kept, schema, dvs, mapping).where(cond)
+
+
 def read_table_pruned(
     spark: SparkSession,
     table: str,
@@ -2442,52 +2474,9 @@ def read_table_pruned(
     hi,
     version: int | None = None,
 ) -> DataFrame:
-    """Snapshot read with METADATA file skipping: only data files
-    whose committed [min, max] zone map for ``col`` intersects
-    [lo, hi] enter the scan (then the predicate is ALSO applied
-    row-level, so the result is exactly the filtered snapshot). This
-    is the Delta/Iceberg data-skipping layer on the commit log: on a
-    time- or key-clustered table (see ``sources/io.write_sorted`` /
-    ``write_zordered``) a narrow range touches O(matching files) of a
-    100 TB table without opening the rest — parquet row-group
-    pushdown can only skip WITHIN files the planner already listed;
-    this skips the listing. Files without recorded stats (older
-    commits, evolved columns) are conservatively kept.
-
-    HIDDEN-PARTITION pruning rides the same call: when the table is
-    laid out by a partition TRANSFORM of ``col`` (``days(col)``,
-    ``truncate(W, col)``) — or by ``col`` itself — the file's path
-    segments prune too (:func:`_path_band_disjoint`), so a plain
-    range predicate skips transform directories with no stats
-    recorded at all (Iceberg's headline behavior)."""
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    phys = mapping.get(col, col)
-    dt = _dtype_map(schema).get(col.lower())
-    bloom_cache: dict = {}
-
-    def _kept(f):
-        s = stats.get(os.path.relpath(f, table), {}).get(phys)
-        if _zone_disjoint(s, lo, hi):
-            return False
-        if _path_band_disjoint(
-            os.path.relpath(f, table), phys, lo, hi, dt
-        ):
-            return False
-        if lo == hi and not isinstance(lo, bool):
-            # a POINT band consults the listing-level bloom sidecar
-            ref = (s or {}).get("bloom")
-            if ref and not _bloom_maybe_contains(
-                table, ref, lo, bloom_cache, dtype=dt
-            ):
-                return False
-        return True
-
-    kept = [f for f in files if _kept(f)]
-    from pyspark.sql import functions as F
-
-    return _scan(spark, table, kept, schema, dvs, mapping).where(
-        F.col(col).between(lo, hi)
-    )
+    """Snapshot read of ``lo <= col <= hi`` with metadata file
+    skipping — :func:`read_table_pruned_multi` over one band."""
+    return read_table_pruned_multi(spark, table, {col: (lo, hi)}, version)
 
 
 def read_table_pruned_multi(
@@ -2496,48 +2485,16 @@ def read_table_pruned_multi(
     predicates: dict,
     version: int | None = None,
 ) -> DataFrame:
-    """Conjunctive range scan with metadata file skipping on EVERY
-    zone-mapped column: ``predicates`` maps column → (lo, hi), a file
-    survives only if ALL its per-column zone maps intersect their
-    ranges, and the full conjunction is re-applied row-level so the
-    result is exactly the filtered snapshot.
-
-    This is the read-side payoff of ``optimize(zorder_by=[x, y])``:
-    on a Z-ordered layout each file covers a small hyper-rectangle,
-    so a two-predicate scan intersects the skip sets — file counts
-    multiply DOWN (each dimension independently eliminates most
-    files), where a lexicographic sort only ever prunes its leading
-    column. Files missing stats for a column are conservatively kept
-    for that column (same rule as :func:`read_table_pruned`)."""
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    types = _dtype_map(schema)
-    kept = [
-        f
-        for f in files
-        if all(
-            not _zone_disjoint(
-                stats.get(os.path.relpath(f, table), {}).get(
-                    mapping.get(c, c)
-                ),
-                lo,
-                hi,
-            )
-            and not _path_band_disjoint(
-                os.path.relpath(f, table),
-                mapping.get(c, c),
-                lo,
-                hi,
-                types.get(c.lower()),
-            )
-            for c, (lo, hi) in predicates.items()
-        )
-    ]
-    from pyspark.sql import functions as F
-
-    cond = F.lit(True)
-    for c, (lo, hi) in predicates.items():
-        cond = cond & F.col(c).between(lo, hi)
-    return _scan(spark, table, kept, schema, dvs, mapping).where(cond)
+    """Conjunctive range scan (``predicates`` maps column → (lo, hi))
+    through :func:`_read_pruned`: a file survives only if EVERY band
+    can intersect it — zone maps, hidden-partition path segments, and
+    bloom sidecars for point bands (:func:`_band_touched`). The
+    read-side payoff of ``optimize(zorder_by=[x, y])``: on a Z-ordered
+    layout each dimension independently eliminates most files."""
+    return _read_pruned(
+        spark, table, version, lambda _: (predicates, None),
+        _bands_cond(predicates),
+    )
 
 
 def read_table_null_pruned(
@@ -2546,31 +2503,14 @@ def read_table_null_pruned(
     col: str,
     version: int | None = None,
 ) -> DataFrame:
-    """``WHERE col IS NULL`` snapshot read with METADATA file
-    skipping: files whose committed null count PROVES zero NULLs for
-    ``col`` never enter the scan (the IS NULL twin of
-    :func:`read_table_pruned` — Delta prunes the same predicate from
-    its per-file ``nullCount``). The find-the-incomplete-rows scan of
-    a backfill or data-quality sweep touches only the files that can
-    hold them. Files without a recorded null count (pre-null-stats
-    commits, stats-less writers) are conservatively kept; the
-    predicate is ALSO applied row-level, so the result is exactly the
-    filtered snapshot."""
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    kept = [
-        f
-        for f in files
-        if (
-            stats.get(os.path.relpath(f, table), {}).get(
-                mapping.get(col, col)
-            )
-            or {}
-        ).get("nulls") != 0
-    ]
+    """``WHERE col IS NULL`` snapshot read through :func:`_read_pruned`
+    — the same pruning as ``read_table_where("col IS NULL")``: files
+    whose committed null count proves zero NULLs are skipped."""
     from pyspark.sql import functions as F
 
-    return _scan(spark, table, kept, schema, dvs, mapping).where(
-        F.col(col).isNull()
+    return _read_pruned(
+        spark, table, version, lambda _: ({}, {col: [None]}),
+        F.col(col).isNull(),
     )
 
 
@@ -2581,49 +2521,17 @@ def read_table_pruned_in(
     values: Sequence,
     version: int | None = None,
 ) -> DataFrame:
-    """``WHERE col IN (...)`` snapshot read with METADATA file
-    skipping: a file survives only if AT LEAST ONE of the probe
-    values lies inside its committed [min, max] zone map — the
-    point-lookup batch (entity backfills, GDPR subject lists, CDC key
-    probes) a 100 TB key-clustered table answers by touching
-    O(matching files). Each value is a degenerate range [v, v]
-    through the same :func:`_zone_disjoint` conservatism (missing
-    stats / non-numeric values keep the file), and the IN predicate
-    is re-applied row-level so the result is exactly the filtered
-    snapshot. NULL probe values are dropped (SQL IN never matches
-    NULL)."""
+    """``WHERE col IN (values)`` snapshot read through
+    :func:`_read_pruned`: a file survives if ANY value may be in it
+    (per-value zone map, path, and bloom probes). NULL values are
+    dropped (SQL IN never matches NULL); mixed-type lists probe each
+    value on its own."""
     from pyspark.sql import functions as F
 
     vals = [v for v in values if v is not None]
-    if not vals:
-        files, schema, _, _, _, mapping = _snapshot(table, version)
-        return _scan(spark, table, [], schema, {}, mapping)
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    phys = mapping.get(col, col)
-    dt = _dtype_map(schema).get(col.lower())
-    bloom_cache: dict = {}
-
-    def _may_hold(f, v):
-        s = stats.get(os.path.relpath(f, table), {}).get(phys)
-        if _zone_disjoint(s, v, v):
-            return False
-        if _path_band_disjoint(
-            os.path.relpath(f, table), phys, v, v, dt
-        ):
-            return False
-        ref = (s or {}).get("bloom")
-        if ref and not _bloom_maybe_contains(
-            table, ref, v, bloom_cache, dtype=dt
-        ):
-            # listing-level bloom sidecar: "definitely absent"
-            # without opening the file — the prune min/max can't
-            # make on an unclustered high-cardinality column
-            return False
-        return True
-
-    kept = [f for f in files if any(_may_hold(f, v) for v in vals)]
-    return _scan(spark, table, kept, schema, dvs, mapping).where(
-        F.col(col).isin(*vals)
+    return _read_pruned(
+        spark, table, version, lambda _: ({}, {col: vals}),
+        F.col(col).isin(*vals),
     )
 
 
@@ -2644,33 +2552,18 @@ def read_table_where(
     predicate: str,
     version: int | None = None,
 ) -> DataFrame:
-    """Snapshot read under an ARBITRARY SQL predicate with the DML
-    verbs' metadata file skipping on the READ side — the one-verb
-    reader for ad-hoc predicates, unifying what
-    :func:`read_table_pruned` (one band) /
-    :func:`read_table_pruned_multi` (band dict) /
-    :func:`read_table_pruned_in` (IN-list) each expose for a single
-    shape: Catalyst's analyzed tree yields per-column bands AND
-    equality/IN point sets (:func:`_sql_conjunct_constraints`), every
-    candidate file is probed through zone maps, hidden-partition path
-    segments, and listing-level bloom sidecars
-    (:func:`_band_touched`), and the FULL predicate re-applies
-    row-level so the result is exactly the filtered snapshot.
-    Unextractable shapes (OR trees, functions) prune nothing —
-    conservative, never wrong. On a clustered/bucketed/bloom-indexed
-    100 TB table the ad-hoc `WHERE user_id IN (…) AND ts >= X` scan
-    touches O(matching files) with zero footer reads for the path
-    probes."""
+    """Snapshot read under an ARBITRARY SQL predicate through
+    :func:`_read_pruned`: Catalyst's analyzed tree yields per-column
+    bands, equality/IN point sets and IS NULL constraints
+    (:func:`_sql_conjunct_constraints`), and the FULL predicate
+    re-applies row-level. Unextractable shapes (OR trees, functions)
+    prune nothing — conservative, never wrong."""
     from pyspark.sql import functions as F
 
-    files, schema, stats, sizes, dvs, mapping = _snapshot(table, version)
-    bands, points = _sql_conjunct_constraints(spark, schema, predicate)
-    kept = _band_touched(
-        table, files, stats, mapping, bands,
-        types=_dtype_map(schema), points=points,
-    )
-    return _scan(spark, table, kept, schema, dvs, mapping).where(
-        F.expr(predicate)
+    return _read_pruned(
+        spark, table, version,
+        lambda schema: _sql_conjunct_constraints(spark, schema, predicate),
+        F.expr(predicate),
     )
 
 
@@ -2680,27 +2573,33 @@ def read_table_where(
 # Python dicts, no session or data dependence. DML retry loops and
 # repeated reads under the same predicate hit the cache; copies are
 # returned so a caller can't mutate the cached value. Size-capped
-# (ADVICE r15 low): DML predicates can embed literal key lists (GDPR
-# point deletes with unique IN-lists per call), so unlike the schema
-# cache the key space is NOT bounded by the table catalog — FIFO
-# eviction keeps a long-running process flat. Analysis-time folding
+# with least-recently-used eviction: DML predicates can embed literal
+# key lists (GDPR point deletes with unique IN-lists per call), so
+# unlike the schema cache the key space is NOT bounded by the table
+# catalog, and a stream of one-off keys must not evict the hot
+# entries of a retry loop. Analysis-time folding
 # of timestamp/date string literals depends on
 # spark.sql.session.timeZone; the engine pins it to UTC for the
 # process lifetime (session._DEFAULT_CONF), which is the invariant
 # that keeps the cache key sound (ADVICE r15 low).
 _CONJUNCT_CACHE: dict = {}
 _CONJUNCT_CACHE_MAX = 4096
+# reads reorder the cache too, and pyspark drivers may be threaded
+_CONJUNCT_LOCK = threading.Lock()
 
 
 def _sql_conjunct_constraints(
     spark: SparkSession, schema: str, predicate: str
 ) -> tuple[dict, dict]:
-    hit = _CONJUNCT_CACHE.get((schema, predicate))
+    key = (schema, predicate)
+    with _CONJUNCT_LOCK:
+        hit = _CONJUNCT_CACHE.pop(key, None)
     if hit is None:
         hit = _sql_conjunct_constraints_uncached(spark, schema, predicate)
+    with _CONJUNCT_LOCK:
         while len(_CONJUNCT_CACHE) >= _CONJUNCT_CACHE_MAX:
             _CONJUNCT_CACHE.pop(next(iter(_CONJUNCT_CACHE)))
-        _CONJUNCT_CACHE[(schema, predicate)] = hit
+        _CONJUNCT_CACHE[key] = hit  # (re)inserted last: most recently used
     bands, points = hit
     return dict(bands), {k: list(v) for k, v in points.items()}
 
@@ -2734,7 +2633,9 @@ def _sql_conjunct_constraints_uncached(
     for narrow CDC batches). Two point conjuncts on one column
     intersect; a point set alongside other conjuncts is sound because
     the row must satisfy EVERY conjunct, so a file holding none of
-    the column's points can hold no matching row.
+    the column's points can hold no matching row. ``col IS NULL``
+    records the point set ``[None]`` (which intersects any literal set
+    to the empty set).
 
     Correctness argument: a file whose zone map is disjoint from a
     conjunct's band has NO row satisfying that conjunct, so the AND
@@ -2881,6 +2782,13 @@ def _sql_conjunct_constraints_uncached(
                 ):
                     narrow(name, lo, hi)
                 continue
+            if cls == "IsNull" and len(kids) == 1:
+                # the NULL "value": a point set of its own, probed
+                # against recorded null counts (see _band_touched)
+                name = attr_of(kids[0])
+                if name:
+                    add_points(name, [None])
+                continue
             if cls == "In" and len(kids) >= 2:
                 name = attr_of(kids[0])
                 vals = [lit_of(k) for k in kids[1:]]
@@ -2947,8 +2855,9 @@ def _band_touched(
     point-delete shape on an unclustered key skips every file whose
     bitset answers "definitely absent"; files missing stats, path
     segments, and sidecars for a column are conservatively kept for
-    that column) — the shared prune behind the DML verbs, identical
-    logic to :func:`read_table_pruned_multi`'s read side. Sound
+    that column) — THE file-probe loop, behind every pruned read
+    (:func:`_read_pruned`), the DML verbs, OPTIMIZE scopes, MERGE and
+    the rebase proofs. Sound
     inside the rebase proofs too: the sidecar indexes every distinct
     non-NULL value of the file (no truncation), so "absent" is exact
     — false positives merely keep files.
@@ -2959,9 +2868,10 @@ def _band_touched(
     there, so the file survives that column only if AT LEAST ONE
     value may be present (per-value zone + path + bloom probes, the
     ``merge_into`` narrow-batch machinery threaded through the expr
-    verbs). An EMPTY set (two disjoint point conjuncts) proves no
-    row can match — every file prunes, matching the row-level
-    no-op."""
+    verbs). A ``None`` point stands for IS NULL: only a recorded null
+    count of 0 refutes it (zone, path and bloom probes do not apply).
+    An EMPTY set (two disjoint point conjuncts) proves no row can
+    match — every file prunes, matching the row-level no-op."""
     bloom_cache: dict = {}
 
     def _point_may_match(rel, c, vals):
@@ -2970,12 +2880,16 @@ def _band_touched(
         s = stats.get(rel, {}).get(phys)
         ref = (s or {}).get("bloom")
         return any(
-            not _zone_disjoint(s, v, v)
-            and not _path_band_disjoint(rel, phys, v, v, dt)
-            and (
-                ref is None
-                or _bloom_maybe_contains(
-                    table, ref, v, bloom_cache, dtype=dt
+            (s or {}).get("nulls") != 0
+            if v is None
+            else (
+                not _zone_disjoint(s, v, v)
+                and not _path_band_disjoint(rel, phys, v, v, dt)
+                and (
+                    ref is None
+                    or _bloom_maybe_contains(
+                        table, ref, v, bloom_cache, dtype=dt
+                    )
                 )
             )
             for v in vals
@@ -3759,7 +3673,7 @@ def optimize(
     snapshot. On conflict the whole read-compact-commit is retried
     against the advanced table (up to ``max_retries``).
     """
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         base = current_version(table)
         files, schema, snap_stats, snap_sizes, snap_dvs, snap_map = _snapshot(
             table, base if base >= 0 else None
@@ -3840,30 +3754,26 @@ def optimize(
             if where is not None:
                 inferred.update(bands)
             keep_stats = sorted(inferred) or None
-        try:
-            # a SCOPED rewrite is ROW-PRESERVING: it can rebase past
-            # ANY pure append (matching or not — the appended files
-            # just stay uncompacted this round); an unscoped
-            # overwrite replaces EVERYTHING and must re-read instead
-            return commit(
-                df,
-                table,
-                action=action,
-                meta=meta,
-                expected_version=base,
-                stats_cols=keep_stats,
-                partition_by=spec or None,
-                remove=remove,
-                data_change=False,
-                rebase_bands=(
-                    ROW_PRESERVING if where is not None else None
-                ),
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # re-read the advanced snapshot and re-compact
-    raise AssertionError("unreachable")
+        # a SCOPED rewrite is ROW-PRESERVING: it can rebase past
+        # ANY pure append (matching or not — the appended files
+        # just stay uncompacted this round); an unscoped
+        # overwrite replaces EVERYTHING and must re-read instead
+        return commit(
+            df,
+            table,
+            action=action,
+            meta=meta,
+            expected_version=base,
+            stats_cols=keep_stats,
+            partition_by=spec or None,
+            remove=remove,
+            data_change=False,
+            rebase_bands=(
+                ROW_PRESERVING if where is not None else None
+            ),
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def compact_small_files(
@@ -3901,7 +3811,7 @@ def compact_small_files(
     if small_file_mb is None:
         small_file_mb = target_file_mb / 2
     threshold = small_file_mb * 1024 * 1024
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         base = current_version(table)
         if base < 0:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -3931,26 +3841,22 @@ def compact_small_files(
             {c for r in rels for c in stats.get(r, {})}
         )
         df = _scan(spark, table, small, schema, dvs, mapping).coalesce(int(n_files))
-        try:
-            return commit(
-                df,
-                table,
-                action="replace",
-                remove=rels,
-                meta={"optimize": "bin-pack", "compacted": len(rels)},
-                expected_version=base,
-                stats_cols=keep_stats or None,
-                data_change=False,
-                # row-preserving: rebase past any pure append instead
-                # of re-packing — the streaming sink appending every
-                # few seconds must not starve its own compaction
-                rebase_bands=ROW_PRESERVING,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # re-read the advanced snapshot and re-pack
-    raise AssertionError("unreachable")
+        return commit(
+            df,
+            table,
+            action="replace",
+            remove=rels,
+            meta={"optimize": "bin-pack", "compacted": len(rels)},
+            expected_version=base,
+            stats_cols=keep_stats or None,
+            data_change=False,
+            # row-preserving: rebase past any pure append instead
+            # of re-packing — the streaming sink appending every
+            # few seconds must not starve its own compaction
+            rebase_bands=ROW_PRESERVING,
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def _raw_positions_df(
@@ -4025,131 +3931,9 @@ def _dv_positions_by_rel(
     return out
 
 
-def _delete_where_dv(
-    spark: SparkSession,
-    table: str,
-    base: int,
-    touched: list,
-    schema: str,
-    dvs: dict,
-    mapping: dict,
-    cond,
-    meta_delete: dict,
-    max_dv_rows: int,
-    cdf: bool = False,
-    rebase_bands: dict | None = None,
-) -> int:
-    """One merge-on-read DELETE attempt against the ``base`` snapshot
-    (see :func:`delete_where` ``mode="dv"``): resolve the physical
-    positions matching ``cond`` (a Column over logical names — rows
-    are deleted exactly where it is TRUE; FALSE and NULL survive,
-    same contract as the copy-on-write path) in the pruned
-    ``touched`` files, union them into those files' vectors, and
-    publish ONE metadata-only ``action="dv"`` commit pinned at
-    ``base + 1`` (raises :class:`CommitConflict` for the caller's
-    retry loop).
-
-    Positions are computed on the RAW files (already-deleted rows
-    included) — the union with the existing vector makes a replayed
-    or overlapping delete idempotent."""
-    last = _last_commit(table)
-    hits_df = _raw_positions_df(
-        spark, table, touched, schema, mapping, cond
-    )
-    # ONE job resolves positions AND enforces the size guard: collect
-    # at most max+1 rows — the sentinel row proves the overflow
-    # without ever materializing an oversized vector on the driver
-    hits = hits_df.limit(max_dv_rows + 1).collect()
-    n = len(hits)
-    if n > max_dv_rows:
-        raise ValueError(
-            f"delete matches more than max_dv_rows={max_dv_rows} "
-            "rows: a deletion vector that size stops being metadata — "
-            "use mode='cow' (copy-on-write) for wide deletes"
-        )
-    new_pos = _dv_positions_by_rel(table, touched, hits)
-    dv_entries = {}
-    for rel, pos in new_pos.items():
-        merged = sorted(set(dvs.get(rel, [])) | pos)
-        if merged != list(dvs.get(rel, [])):
-            dv_entries[rel] = merged
-    if not dv_entries:
-        return base  # nothing newly deleted: publish no version
-    change_rels = None
-    if cdf:
-        from pyspark.sql import functions as F
-
-        change_rels = _write_change_files(
-            table,
-            _scan(spark, table, touched, schema, dvs, mapping)
-            .where(cond)
-            .withColumn("_change_type", F.lit("delete")),
-            mapping,
-        )
-    record = {
-        "version": base + 1,
-        "action": "dv",
-        "add": [],
-        "schema": last["schema"],
-        "commit_id": uuid.uuid4().hex,
-        "ts": _next_commit_ts(table, last),
-        "meta": {"delete": {**meta_delete, "mode": "dv", "rows": n}},
-        "dv": _encode_dv_entries(table, dv_entries),
-        "sizes": {},
-    }
-    if change_rels is not None:
-        record["change_files"] = sorted(change_rels)
-    if last.get("constraints"):
-        record["constraints"] = last["constraints"]
-    if last.get("partition_by"):
-        record["partition_by"] = last["partition_by"]
-    if last.get("column_mapping"):
-        record["column_mapping"] = last["column_mapping"]
-    if last.get("bloom_cols"):
-        record["bloom_cols"] = last["bloom_cols"]
-    if last.get("stats_cols"):
-        record["stats_cols"] = last["stats_cols"]
-    if last.get("checkpoint_interval"):
-        record["checkpoint_interval"] = last["checkpoint_interval"]
-    # metadata-only publish with benign-conflict rebase: a concurrent
-    # pure append disjoint from the delete's bands re-points this same
-    # record (positions were computed on the base files, which appends
-    # never touch) at the new head — zero extra Spark jobs
-    version = base + 1
-    for _ in range(20):
-        try:
-            _DEFAULT_ARBITER.publish(
-                _log_path(table, version), json.dumps(record)
-            )
-            _maybe_auto_checkpoint(
-                table, version, int(record.get("checkpoint_interval", 0))
-            )
-            return version
-        except CommitConflict as e:
-            new_last = _last_commit(table)
-            new_head = new_last["version"] if new_last else -1
-            if (
-                rebase_bands is None
-                or new_head < version
-                or not _appends_disjoint(
-                    table,
-                    version - 1,
-                    new_head,
-                    rebase_bands,
-                    frozenset(dv_entries),
-                )
-            ):
-                raise CommitConflict(
-                    f"version {version} of {table} was committed "
-                    "concurrently"
-                ) from e
-            version = new_head + 1
-            record["version"] = version
-            record["ts"] = _next_commit_ts(table, new_last)
-    raise CommitConflict(
-        f"{table}: gave up rebasing past concurrent appends after 20 "
-        "attempts"
-    )
+def _band_meta(col: str, lo, hi) -> dict:
+    """The band verbs' recorded predicate meta."""
+    return {"col": col, "lo": _json_safe(lo), "hi": _json_safe(hi)}
 
 
 def delete_where(
@@ -4164,123 +3948,13 @@ def delete_where(
     max_dv_rows: int = 1_000_000,
     cdf: bool = False,
 ) -> int:
-    """Row-level DELETE of rows with ``col`` in [lo, hi] — the
-    right-to-be-forgotten / retention-expiry mutation — as ONE atomic
-    ``replace`` commit that rewrites only the files that can contain
-    matches.
-
-    This is Delta/Iceberg copy-on-write DELETE on the commit log:
-    the zone maps recorded at write time (``commit(stats_cols=...)``)
-    prune the rewrite set the same way :func:`read_table_pruned`
-    prunes reads, so on a key- or time-clustered table (see
-    ``sources/io.write_sorted``) deleting one key's rows rewrites
-    O(matching files) of a 100 TB table, not the table. Files
-    without zone maps are conservatively rewritten (they MIGHT hold
-    matches — correctness beats write amplification). Untouched
-    files stay byte-identical and keep their zone maps; rewritten
-    survivors get fresh stats iff ``stats_cols`` is passed (pass the
-    same columns the table was built with).
-
-    Returns the new version — or the CURRENT version unchanged when
-    no file can contain a match (a no-op delete publishes nothing).
-    Time travel to pre-delete versions still shows the deleted rows
-    (the replaced files are retained for their older snapshots; only
-    :func:`vacuum` of those versions would drop them) — if the
-    deletion must be physical for compliance, vacuum after the
-    retention window like Delta's VACUUM-after-DELETE discipline.
-    Concurrency: the commit pins its snapshot (``expected_version``)
-    and the whole prune-rewrite-commit retries on conflict, exactly
-    like :func:`optimize`.
-
-    ``mode="dv"`` — MERGE-ON-READ deletion vectors (Delta/Iceberg
-    position deletes), the answer to copy-on-write's
-    write-amplification at 100 TB: a 10-row GDPR delete in a 1 GB
-    file must not rewrite the gigabyte. Instead of rewriting, the
-    matching (file, position) pairs are recorded in a metadata-only
-    commit (``action="dv"``; each file's entry carries its FULL
-    deleted-position set, union'd with any prior vector) and every
-    reader anti-filters them at scan time (:func:`_scan` — a
-    broadcast probe riding the scan, no extra pass). The vectors are
-    purged into real rewrites by :func:`optimize` /
-    :func:`compact_small_files` (which treat a DV'd file as
-    rewrite-worthy regardless of size); physical erasure is then the
-    same expire→vacuum discipline as copy-on-write. ``max_dv_rows``
-    bounds one call's vector growth — the records are JSON position
-    lists, metadata-sized only while deletes are narrow (production
-    DVs are roaring bitmaps; the guard keeps this representation
-    honest) — and a wider delete must use ``mode="cow"``.
-    """
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
-        base = current_version(table)
-        if base < 0:
-            raise FileNotFoundError(f"{table} has no transaction log")
-        files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        # the shared DML prune: zone maps + hidden-partition path
-        # probes + point-band bloom sidecars (one [lo, hi] band)
-        touched = _band_touched(
-            table, files, stats, mapping, {col: (lo, hi)},
-            types=_dtype_map(schema),
-        )
-        if not touched:
-            return base
-        if mode == "dv":
-            try:
-                return _delete_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    F.col(col).between(lo, hi),
-                    {"col": col, "lo": _json_safe(lo), "hi": _json_safe(hi)},
-                    max_dv_rows, cdf=cdf,
-                    rebase_bands={col: (lo, hi)},
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue  # table advanced: re-prune and re-resolve
-        change_rels = None
-        if cdf:
-            change_rels = _write_change_files(
-                table,
-                _scan(spark, table, touched, schema, dvs, mapping)
-                .where(F.col(col).between(lo, hi))
-                .withColumn("_change_type", F.lit("delete")),
-                mapping,
-            )
-        # NULL-valued rows are NOT in [lo, hi] and must SURVIVE the
-        # copy-on-write rewrite: a bare ~between() is NULL for them,
-        # which a WHERE drops — silent physical deletion of every
-        # NULL row in any touched file (ADVICE r8, high). The read
-        # goes through _scan so rows already deleted by a vector stay
-        # deleted in the rewritten files.
-        survivors = _scan(spark, table, touched, schema, dvs, mapping).where(
-            F.col(col).isNull() | ~F.col(col).between(lo, hi)
-        )
-        try:
-            return commit(
-                survivors,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={
-                    "delete": {
-                        "col": col,
-                        "lo": _json_safe(lo),
-                        "hi": _json_safe(hi),
-                    }
-                },
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands={col: (lo, hi)},
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # table advanced: re-prune against the new snapshot
-    raise AssertionError("unreachable")
+    """:func:`delete_where_expr` over the one band ``lo <= col <= hi``
+    (NULL-valued rows survive), recording ``{"col", "lo", "hi"}`` as
+    the commit's delete meta."""
+    return _dml_where(
+        spark, table, {col: (lo, hi)}, None, max_retries, stats_cols,
+        mode, max_dv_rows, cdf, meta=_band_meta(col, lo, hi),
+    )
 
 
 _CHANGE_DIR = "changes"
@@ -4441,16 +4115,13 @@ def _resolve_where(spark: SparkSession, schema: str, where):
     if isinstance(where, dict):
         if not where:
             raise ValueError("empty predicate: pass at least one band")
-        cond = F.lit(True)
-        for c, (lo, hi) in where.items():
-            cond = cond & F.col(c).between(lo, hi)
         meta = {
             "bands": {
                 c: [_json_safe(lo), _json_safe(hi)]
                 for c, (lo, hi) in where.items()
             }
         }
-        return dict(where), {}, cond, meta
+        return dict(where), {}, _bands_cond(where), meta
     raise TypeError(
         "where must be a SQL predicate string or a {col: (lo, hi)} "
         f"dict of conjunctive bands, got {type(where).__name__}"
@@ -4467,85 +4138,42 @@ def delete_where_expr(
     max_dv_rows: int = 1_000_000,
     cdf: bool = False,
 ) -> int:
-    """Row-level DELETE under an EXPRESSION predicate — the verb a
-    user's first real delete needs (``country = 'de' AND ts <
-    1700000000``, OR/IN/LIKE, any SQL Spark parses), where
-    :func:`delete_where`'s single [lo, hi] band can't go. ``where``
-    is a SQL predicate string or a ``{col: (lo, hi)}`` dict of
-    conjunctive bands (see :func:`_resolve_where`).
+    """Row-level DELETE under an EXPRESSION predicate (``country =
+    'de' AND ts < 1700000000``, OR/IN/LIKE, any SQL Spark parses):
+    ``where`` is a SQL predicate string or a ``{col: (lo, hi)}`` dict
+    of conjunctive bands (see :func:`_resolve_where`).
 
     Semantics: rows where the predicate is TRUE are deleted; FALSE
-    and NULL survive (SQL DELETE's WHERE contract — consistent with
-    :func:`delete_where`'s NULL-survives rule). Pruning: band dicts
-    intersect zone maps per column (multiplicative skipping on a
-    Z-ordered layout); SQL strings get best-effort conjunct bands
-    from Catalyst's analyzed tree, degrading conservatively to a
-    full-table rewrite scope when nothing is extractable — never to
-    a wrong answer. ``mode="cow"`` rewrites the touched files'
-    survivors as one atomic replace; ``mode="dv"`` records
-    merge-on-read deletion vectors (same guard rails as
-    :func:`delete_where`). Returns the new version, or the current
-    one when no file can match / nothing is newly deleted."""
-    from pyspark.sql import functions as F
+    and NULL survive (SQL DELETE's WHERE contract). Pruning: band
+    dicts intersect zone maps per column (multiplicative skipping on
+    a Z-ordered layout); SQL strings get best-effort conjunct bands
+    and point sets from Catalyst's analyzed tree, degrading
+    conservatively to a full-table rewrite scope when nothing is
+    extractable — never to a wrong answer. Files without zone maps
+    are conservatively rewritten; untouched files stay byte-identical.
 
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
-        base = current_version(table)
-        if base < 0:
-            raise FileNotFoundError(f"{table} has no transaction log")
-        files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        bands, points, cond, meta = _resolve_where(spark, schema, where)
-        touched = _band_touched(
-            table, files, stats, mapping, bands,
-            types=_dtype_map(schema), points=points,
-        )
-        if not touched:
-            return base
-        if mode == "dv":
-            try:
-                return _delete_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    cond, meta, max_dv_rows, cdf=cdf,
-                    rebase_bands=bands,
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue
-        change_rels = None
-        if cdf:
-            change_rels = _write_change_files(
-                table,
-                _scan(spark, table, touched, schema, dvs, mapping)
-                .where(cond)
-                .withColumn("_change_type", F.lit("delete")),
-                mapping,
-            )
-        # survivors = NOT coalesce(pred, false): FALSE and NULL rows
-        # stay — a bare ~pred would be NULL for NULL-predicate rows
-        # and the WHERE would silently drop them (the delete_where
-        # NULL lesson, generalized to arbitrary predicates)
-        survivors = _scan(
-            spark, table, touched, schema, dvs, mapping
-        ).where(~F.coalesce(cond, F.lit(False)))
-        try:
-            return commit(
-                survivors,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={"delete": meta},
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands=bands,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+    ``mode="cow"`` rewrites the touched files' survivors as one atomic
+    ``replace`` commit. ``mode="dv"`` — MERGE-ON-READ deletion vectors
+    (Delta/Iceberg position deletes): the matching (file, position)
+    pairs land in a metadata-only ``action="dv"`` commit (each file's
+    entry carries its FULL deleted-position set, union'd with any prior
+    vector) and every reader anti-filters them at scan time
+    (:func:`_scan`); :func:`optimize` / :func:`compact_small_files`
+    purge them into real rewrites. ``max_dv_rows`` bounds one call's
+    vector growth — JSON position lists stay metadata-sized only while
+    deletes are narrow — and a wider delete must use ``mode="cow"``.
+    ``cdf=True`` records the deleted rows as change files.
+
+    Time travel to pre-delete versions still shows the deleted rows;
+    physical erasure is the expire → :func:`vacuum` discipline.
+    Concurrency: the commit pins its snapshot and the whole
+    prune-rewrite-commit retries on conflict (up to ``max_retries``).
+    Returns the new version, or the current one when no file can
+    match / nothing is newly deleted."""
+    return _dml_where(
+        spark, table, where, None, max_retries, stats_cols, mode,
+        max_dv_rows, cdf,
+    )
 
 
 def _apply_set_preimage(df: DataFrame, cond, set_exprs: dict) -> DataFrame:
@@ -4586,94 +4214,177 @@ def _apply_set_preimage(df: DataFrame, cond, set_exprs: dict) -> DataFrame:
     return df.select(*out)
 
 
-def _update_where_dv(
+def _dml_where(
     spark: SparkSession,
     table: str,
-    base: int,
-    touched: list,
-    schema: str,
-    dvs: dict,
-    mapping: dict,
-    cond,
-    set_exprs: dict,
-    meta_update: dict,
+    where,
+    set_exprs: dict | None,
+    max_retries: int,
+    stats_cols: Sequence[str] | None,
+    mode: str,
     max_dv_rows: int,
-    stats_cols,
-    cdf: bool = False,
-    rebase_bands: dict | None = None,
+    cdf: bool,
+    meta: dict | None = None,
 ) -> int:
-    """One MERGE-ON-READ UPDATE attempt against the ``base`` snapshot
-    (Delta's DV-era UPDATE): ONE commit carrying a deletion vector on
-    each touched file (the matched rows' old positions) plus an
-    APPEND of the updated rows — a 10-row update in a 1 GB file
-    writes a 10-row file and a 10-position vector instead of
-    rewriting the gigabyte. Published via :func:`commit`
-    ``action="dv"`` pinned at ``base + 1`` (CommitConflict → caller
-    retries), so CHECK constraints ride the write job's Observation
-    and the partition layout / column mapping / stats machinery all
-    apply to the appended rows exactly as for any other write.
-
-    Already-DV-deleted rows are EXCLUDED (driver-side, after the
-    bounded position collect): an update must never resurrect a
-    deleted row through its append half. The appended-row frame reads
-    through :func:`_scan` with the same predicate, so the two halves
-    of the commit cover exactly the same live row set."""
+    """THE row-level DML skeleton behind the DELETE (``set_exprs``
+    None) and UPDATE verbs. Each :func:`_retry` pass: snapshot →
+    :func:`_resolve_where` + :func:`_band_touched` → optional CDF
+    change files → copy-on-write replace of the touched files, or
+    merge-on-read deletion vectors → a publish pinned at the snapshot
+    (benign concurrent appends disjoint from the predicate's bands are
+    rebased past). ``meta`` replaces the predicate part of the recorded
+    commit meta (the band verbs record ``{"col", "lo", "hi"}``)."""
     from pyspark.sql import functions as F
 
-    hits = (
-        _raw_positions_df(spark, table, touched, schema, mapping, cond)
-        .limit(max_dv_rows + 1)
-        .collect()
-    )
-    if len(hits) > max_dv_rows:
-        raise ValueError(
-            f"update matches more than max_dv_rows={max_dv_rows} "
-            "rows: a deletion vector that size stops being metadata — "
-            "use mode='cow' (copy-on-write) for wide updates"
-        )
-    matched = _dv_positions_by_rel(table, touched, hits)
-    live = {
-        rel: pos - set(dvs.get(rel, []))
-        for rel, pos in matched.items()
-    }
-    live = {rel: pos for rel, pos in live.items() if pos}
-    n_live = sum(len(pos) for pos in live.values())
-    if n_live == 0:
-        return base  # every match already deleted: publish nothing
-    dv_entries = {
-        rel: sorted(set(dvs.get(rel, [])) | pos)
-        for rel, pos in live.items()
-    }
-    # the append half: the SAME live rows (scan is DV-filtered, same
-    # predicate, same files) with the SET expressions applied — no
-    # when() needed, every row here matched; one pre-image select so
-    # dependent SETs (SET a=b, b=a) swap like SQL
-    pre = _scan(spark, table, touched, schema, dvs, mapping).where(cond)
-    upd = _apply_set_preimage(pre, None, set_exprs)
-    change_rels = None
-    if cdf:
-        change_rels = _write_change_files(
-            table,
-            pre.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                upd.withColumn(
-                    "_change_type", F.lit("update_postimage")
+    if mode not in ("cow", "dv"):
+        raise ValueError(f"mode must be cow|dv, got {mode!r}")
+    kind = "delete" if set_exprs is None else "update"
+
+    def attempt():
+        base = current_version(table)
+        if base < 0:
+            raise FileNotFoundError(f"{table} has no transaction log")
+        files, schema, stats, _, dvs, mapping = _snapshot(table, base)
+        if set_exprs is not None:
+            cols = set(_struct_of(spark, schema).names)
+            unknown = sorted(set(set_exprs) - cols)
+            if unknown:
+                raise ValueError(
+                    f"SET targets columns not in the table: {unknown}"
                 )
-            ),
-            mapping,
+        bands, points, cond, where_meta = _resolve_where(
+            spark, schema, where
         )
-    return commit(
-        upd,
-        table,
-        action="dv",
-        dv_entries=dv_entries,
-        meta={"update": {**meta_update, "mode": "dv", "rows": n_live}},
-        expected_version=base,
-        stats_cols=stats_cols,
-        change_files=change_rels,
-        rebase_bands=rebase_bands,
-    )
+        touched = _band_touched(
+            table, files, stats, mapping, bands,
+            types=_dtype_map(schema), points=points,
+        )
+        if not touched:
+            return base
+        rec_meta = dict(meta or where_meta)
+        if set_exprs is not None:
+            rec_meta["set"] = sorted(set_exprs)
+        dv_entries = None
+        if mode == "dv":
+            # ONE job resolves the RAW positions (already-deleted rows
+            # included) AND enforces the size guard: collect at most
+            # max+1 rows — the sentinel row proves the overflow without
+            # ever materializing an oversized vector on the driver
+            hits = (
+                _raw_positions_df(spark, table, touched, schema, mapping, cond)
+                .limit(max_dv_rows + 1)
+                .collect()
+            )
+            if len(hits) > max_dv_rows:
+                raise ValueError(
+                    f"{kind} matches more than max_dv_rows={max_dv_rows} "
+                    "rows: a deletion vector that size stops being "
+                    f"metadata — use mode='cow' (copy-on-write) for wide "
+                    f"{kind}s"
+                )
+            # already-deleted positions drop out: a replayed delete
+            # publishes nothing, and an update never resurrects a
+            # deleted row through its append half
+            live = {
+                rel: pos - set(dvs.get(rel, []))
+                for rel, pos in _dv_positions_by_rel(
+                    table, touched, hits
+                ).items()
+            }
+            dv_entries = {
+                rel: sorted(set(dvs.get(rel, [])) | pos)
+                for rel, pos in live.items()
+                if pos
+            }
+            if not dv_entries:
+                return base  # nothing newly matched: publish no version
+            rec_meta["mode"] = "dv"
+            rec_meta["rows"] = (
+                len(hits)
+                if set_exprs is None
+                else sum(map(len, live.values()))
+            )
+        change_rels = out = None
+        if mode == "cow" or set_exprs is not None or cdf:
+            # through the deletion vectors: DML must never resurrect a
+            # row a vector already deleted from a touched file
+            scan = _scan(spark, table, touched, schema, dvs, mapping)
+            post = None
+            if mode == "dv" or cdf:
+                pre = scan.where(cond)
+                if set_exprs is not None:
+                    post = _apply_set_preimage(pre, None, set_exprs)
+            if cdf:
+                changes = (
+                    pre.withColumn("_change_type", F.lit("delete"))
+                    if post is None
+                    else pre.withColumn(
+                        "_change_type", F.lit("update_preimage")
+                    ).unionByName(
+                        post.withColumn(
+                            "_change_type", F.lit("update_postimage")
+                        )
+                    )
+                )
+                change_rels = _write_change_files(table, changes, mapping)
+            if mode == "dv":
+                # the append half of a merge-on-read update: the same
+                # live rows (DV-filtered scan, same predicate, same
+                # files) with every SET applied
+                out = post
+            elif set_exprs is None:
+                # survivors = NOT coalesce(pred, false): FALSE and NULL
+                # rows stay — a bare ~pred would be NULL for
+                # NULL-predicate rows and the WHERE would silently drop
+                # them (ADVICE r8, high)
+                out = scan.where(~F.coalesce(cond, F.lit(False)))
+            else:
+                # cow rewrites the touched files whole: non-matching
+                # rows byte-equal, NULL-predicate rows keep their value
+                out = _apply_set_preimage(scan, cond, set_exprs)
+        if mode == "cow" or set_exprs is not None:
+            return commit(
+                out,
+                table,
+                action="replace" if mode == "cow" else "dv",
+                remove=(
+                    [os.path.relpath(f, table) for f in touched]
+                    if mode == "cow"
+                    else None
+                ),
+                dv_entries=dv_entries,
+                meta={kind: rec_meta},
+                expected_version=base,
+                stats_cols=stats_cols,
+                change_files=change_rels,
+                rebase_bands=bands,
+            )
+        # a merge-on-read delete appends nothing: a metadata-only
+        # record pinned at base + 1 (positions were computed on the
+        # base files, which appends never touch)
+        last = _last_commit(table)
+        record = _carry_props(
+            {
+                "version": base + 1,
+                "action": "dv",
+                "add": [],
+                "schema": last["schema"],
+                "commit_id": uuid.uuid4().hex,
+                "ts": _next_commit_ts(table, last),
+                "meta": {"delete": rec_meta},
+                "dv": _encode_dv_entries(table, dv_entries),
+                "sizes": {},
+            },
+            last,
+        )
+        if change_rels is not None:
+            record["change_files"] = sorted(change_rels)
+        return _publish(
+            table, record, rebase_bands=bands,
+            staged_touched=frozenset(dv_entries),
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def update_where_expr(
@@ -4687,91 +4398,30 @@ def update_where_expr(
     max_dv_rows: int = 1_000_000,
     cdf: bool = False,
 ) -> int:
-    """Row-level UPDATE under an EXPRESSION predicate (the
-    :func:`delete_where_expr` of the UPDATE verb): ``where`` is a SQL
-    predicate string or a ``{col: (lo, hi)}`` band dict; rows where
-    it is TRUE get each ``set_exprs`` column replaced (name → Column
-    or SQL string); FALSE and NULL rows keep their values. Pruning
-    and conservative fallbacks exactly as :func:`_resolve_where`.
+    """Row-level UPDATE under an EXPRESSION predicate: ``where`` is a
+    SQL predicate string or a ``{col: (lo, hi)}`` band dict (see
+    :func:`_resolve_where`); rows where it is TRUE get each
+    ``set_exprs`` column replaced (name → Column or SQL string, e.g.
+    ``{"v": "upper(v)"}``); FALSE and NULL rows keep their values.
+    Pre-image semantics (:func:`_apply_set_preimage`): every SET
+    expression and the predicate read the row as it was BEFORE the
+    update, so ``SET a = b, b = a`` swaps. Existing columns only: SET
+    cannot add or retype a column (that is schema evolution —
+    ``merge_schema`` append or overwrite).
 
-    ``mode="cow"`` rewrites touched files (non-matching rows copied
-    byte-equal); ``mode="dv"`` is merge-on-read — one commit with a
-    deletion vector over the old positions plus an append of the
-    updated rows (see :func:`_update_where_dv`). Returns the new
-    version, or the current one when nothing can match."""
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
-        base = current_version(table)
-        if base < 0:
-            raise FileNotFoundError(f"{table} has no transaction log")
-        files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        cols = set(_struct_of(spark, schema).names)
-        unknown = sorted(set(set_exprs) - cols)
-        if unknown:
-            raise ValueError(
-                f"SET targets columns not in the table: {unknown}"
-            )
-        bands, points, cond, meta = _resolve_where(spark, schema, where)
-        touched = _band_touched(
-            table, files, stats, mapping, bands,
-            types=_dtype_map(schema), points=points,
-        )
-        if not touched:
-            return base
-        meta = {**meta, "set": sorted(set_exprs)}
-        if mode == "dv":
-            try:
-                return _update_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    cond, set_exprs, meta, max_dv_rows, stats_cols,
-                    cdf=cdf, rebase_bands=bands,
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue
-        change_rels = None
-        if cdf:
-            pre = _scan(
-                spark, table, touched, schema, dvs, mapping
-            ).where(cond)
-            post = _apply_set_preimage(pre, None, set_exprs)
-            change_rels = _write_change_files(
-                table,
-                pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                ),
-                mapping,
-            )
-        df = _apply_set_preimage(
-            _scan(spark, table, touched, schema, dvs, mapping),
-            cond,
-            set_exprs,
-        )
-        try:
-            return commit(
-                df,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={"update": meta},
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands=bands,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+    ``mode="cow"`` rewrites the touched files (non-matching rows
+    copied byte-equal, so a zone-map false positive costs a copy,
+    never a wrong update); ``mode="dv"`` is merge-on-read — one
+    commit with a deletion vector over the matched rows' old
+    positions plus an append of the updated rows, zero file rewrites
+    (``max_dv_rows`` guard as in :func:`delete_where_expr`).
+    ``cdf=True`` records update_preimage / update_postimage change
+    files. Returns the new version, or the current one when nothing
+    can match."""
+    return _dml_where(
+        spark, table, where, set_exprs, max_retries, stats_cols, mode,
+        max_dv_rows, cdf,
+    )
 
 
 def update_where(
@@ -4787,123 +4437,13 @@ def update_where(
     max_dv_rows: int = 1_000_000,
     cdf: bool = False,
 ) -> int:
-    """Row-level UPDATE: rows with ``col`` in [lo, hi] get each
-    ``set_exprs`` column replaced (name → Column or SQL string, e.g.
-    ``{"v": "upper(v)"}``), published as ONE atomic ``replace``
-    commit — the third leg of the DML triad next to
-    :func:`delete_where` and the MERGE kernel (`operators/merge.py`).
-
-    Same copy-on-write discipline as :func:`delete_where`: zone maps
-    bound the rewrite to files that can contain matches; NON-matching
-    rows in a touched file are rewritten byte-equal (the predicate is
-    re-applied row-level inside the file, so a zone-map false
-    positive costs a copy, never a wrong update); untouched files
-    stay put. Updating the pruning column itself is allowed — the
-    survivors' fresh stats (iff ``stats_cols``) keep later pruned
-    reads correct. Existing columns only: SET cannot add or retype a
-    column (that is schema evolution — ``merge_schema`` append or
-    overwrite). Returns the new version, or the current one when no
-    file can match.
-
-    ``mode="dv"`` — MERGE-ON-READ update (Delta's DV-era UPDATE): one
-    commit carrying a deletion vector over the matched rows' old
-    positions plus an append of the updated rows, zero file rewrites
-    (see :func:`_update_where_dv`; ``max_dv_rows`` is the same
-    metadata-honesty guard as :func:`delete_where`'s)."""
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"mode must be cow|dv, got {mode!r}")
-    for attempt in range(max(1, max_retries)):
-        base = current_version(table)
-        if base < 0:
-            raise FileNotFoundError(f"{table} has no transaction log")
-        files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        cols = set(_struct_of(spark, schema).names)
-        unknown = sorted(set(set_exprs) - cols)
-        if unknown:
-            raise ValueError(
-                f"SET targets columns not in the table: {unknown}"
-            )
-        # the shared DML prune: zone maps + hidden-partition path
-        # probes + point-band bloom sidecars (one [lo, hi] band)
-        touched = _band_touched(
-            table, files, stats, mapping, {col: (lo, hi)},
-            types=_dtype_map(schema),
-        )
-        if not touched:
-            return base
-        if mode == "dv":
-            try:
-                return _update_where_dv(
-                    spark, table, base, touched, schema, dvs, mapping,
-                    F.col(col).between(lo, hi), set_exprs,
-                    {
-                        "col": col,
-                        "lo": _json_safe(lo),
-                        "hi": _json_safe(hi),
-                        "set": sorted(set_exprs),
-                    },
-                    max_dv_rows, stats_cols, cdf=cdf,
-                    rebase_bands={col: (lo, hi)},
-                )
-            except CommitConflict:
-                if attempt == max(1, max_retries) - 1:
-                    raise
-                continue  # table advanced: re-prune and re-resolve
-        change_rels = None
-        if cdf:
-            pre = _scan(
-                spark, table, touched, schema, dvs, mapping
-            ).where(F.col(col).between(lo, hi))
-            post = _apply_set_preimage(pre, None, set_exprs)
-            change_rels = _write_change_files(
-                table,
-                pre.withColumn(
-                    "_change_type", F.lit("update_preimage")
-                ).unionByName(
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                ),
-                mapping,
-            )
-        # between() is NULL for NULL rows; when() treats NULL as
-        # false, so NULL rows take the otherwise() branch and keep
-        # their old value. Pre-image projection: every SET expression
-        # reads the ORIGINAL columns (one select), so dependent SETs
-        # swap and a predicate on a SET column matches consistently.
-        # through the deletion vectors: an UPDATE rewrite must not
-        # resurrect rows a DV already deleted from a touched file
-        df = _apply_set_preimage(
-            _scan(spark, table, touched, schema, dvs, mapping),
-            F.col(col).between(lo, hi),
-            set_exprs,
-        )
-        try:
-            return commit(
-                df,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={
-                    "update": {
-                        "col": col,
-                        "lo": _json_safe(lo),
-                        "hi": _json_safe(hi),
-                        "set": sorted(set_exprs),
-                    }
-                },
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                rebase_bands={col: (lo, hi)},
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+    """:func:`update_where_expr` over the one band ``lo <= col <= hi``,
+    recording ``{"col", "lo", "hi", "set"}`` as the commit's update
+    meta."""
+    return _dml_where(
+        spark, table, {col: (lo, hi)}, set_exprs, max_retries, stats_cols,
+        mode, max_dv_rows, cdf, meta=_band_meta(col, lo, hi),
+    )
 
 
 def _merge_change_frame(
@@ -5163,60 +4703,31 @@ def merge_into(
             r[0]
             for r in updates.select(prune_col).distinct().collect()
         ]
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         base = current_version(table)
         if base < 0:
             raise FileNotFoundError(f"{table} has no transaction log")
         files, schema, stats, sizes, dvs, mapping = _snapshot(table, base)
-        phys = mapping.get(prune_col, prune_col)
-        prune_dt = _dtype_map(schema).get(prune_col.lower())
-        sets = (
-            _batch_bucket_sets(files, phys) if prunable else {}
-        )
-        bloom_cache: dict = {}
-
-        def _points_disjoint(rel):
-            """True when NO batch key can live in the file (every key
-            refuted by its zone map, path segments, or bloom
-            sidecar)."""
-            if point_vals is None:
-                return False
-            s = stats.get(rel, {}).get(phys)
-            ref = (s or {}).get("bloom")
-            return all(
-                _zone_disjoint(s, v, v)
-                or _path_band_disjoint(rel, phys, v, v, prune_dt)
-                or (
-                    ref is not None
-                    and not _bloom_maybe_contains(
-                        table, ref, v, bloom_cache, dtype=prune_dt
-                    )
+        touched = files
+        if prunable:
+            phys = mapping.get(prune_col, prune_col)
+            sets = _batch_bucket_sets(files, phys)
+            touched = [
+                f
+                for f in _band_touched(
+                    table, files, stats, mapping,
+                    {prune_col: (bounds["lo"], bounds["hi"])},
+                    types=_dtype_map(schema),
+                    points=(
+                        None
+                        if point_vals is None
+                        else {prune_col: point_vals}
+                    ),
                 )
-                for v in point_vals
-            )
-        touched = [
-            f
-            for f in files
-            if not prunable
-            or not (
-                _zone_disjoint(
-                    stats.get(os.path.relpath(f, table), {}).get(phys),
-                    bounds["lo"],
-                    bounds["hi"],
-                )
-                or _path_band_disjoint(
-                    os.path.relpath(f, table),
-                    phys,
-                    bounds["lo"],
-                    bounds["hi"],
-                    prune_dt,
-                )
-                or _bucket_set_disjoint(
+                if not _bucket_set_disjoint(
                     os.path.relpath(f, table), phys, sets
                 )
-                or _points_disjoint(os.path.relpath(f, table))
-            )
-        ]
+            ]
         # through the deletion vectors: DV-deleted rows must not be
         # merge bases nor reappear in the rewritten files
         base_df = _scan(spark, table, touched, schema, dvs, mapping)
@@ -5242,41 +4753,37 @@ def merge_into(
                 _merge_change_frame(base_df, merged, keys, version_cols),
                 mapping,
             )
-        try:
-            return commit(
-                merged,
-                table,
-                action="replace",
-                remove=[os.path.relpath(f, table) for f in touched],
-                meta={
-                    "merge": {
-                        "keys": list(keys),
-                        "version_cols": list(version_cols),
-                        "prune_col": prune_col,
-                        "lo": _json_safe(bounds["lo"]),
-                        "hi": _json_safe(bounds["hi"]),
-                    }
-                },
-                expected_version=base,
-                stats_cols=stats_cols,
-                change_files=change_rels,
-                # benign-conflict rebase: an append whose files are
-                # provably outside the batch's key band holds no row
-                # this merge could match OR collide with (inserts
-                # included — every batch key lies in [lo, hi] on
-                # prune_col), so the staged merge re-targets the new
-                # head instead of re-merging
-                rebase_bands=(
-                    {prune_col: (bounds["lo"], bounds["hi"])}
-                    if prunable
-                    else None
-                ),
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # table advanced: re-merge against the new snapshot
-    raise AssertionError("unreachable")
+        return commit(
+            merged,
+            table,
+            action="replace",
+            remove=[os.path.relpath(f, table) for f in touched],
+            meta={
+                "merge": {
+                    "keys": list(keys),
+                    "version_cols": list(version_cols),
+                    "prune_col": prune_col,
+                    "lo": _json_safe(bounds["lo"]),
+                    "hi": _json_safe(bounds["hi"]),
+                }
+            },
+            expected_version=base,
+            stats_cols=stats_cols,
+            change_files=change_rels,
+            # benign-conflict rebase: an append whose files are
+            # provably outside the batch's key band holds no row
+            # this merge could match OR collide with (inserts
+            # included — every batch key lies in [lo, hi] on
+            # prune_col), so the staged merge re-targets the new
+            # head instead of re-merging
+            rebase_bands=(
+                {prune_col: (bounds["lo"], bounds["hi"])}
+                if prunable
+                else None
+            ),
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def _is_metadata_only_republish(table: str, rec: dict) -> bool:
@@ -5782,7 +5289,7 @@ def restore(
         raise ValueError("restore needs exactly one of version|timestamp")
     if timestamp is not None:
         version = version_at_timestamp(table, timestamp)
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         last = _last_commit(table)
         if last is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -5807,52 +5314,28 @@ def restore(
             # the target's LOGICAL rows, not its physical files alone
             record["dv"] = _encode_dv_entries(table, kept_dvs)
         record["sizes"] = _fill_sizes(table, rels, sizes)
-        # the FULL target state comes back, CHECK constraints included
-        # (a restore across an add_constraint must not keep enforcing
-        # a rule the restored rows were never validated against — and
-        # the restore of a constrained version re-arms its rules)
-        target_cons = _constraints_at(table, target)
-        if target_cons:
-            record["constraints"] = target_cons
-        target_rec = _read_log(table, after=target - 1, through=target)
-        if target_rec and target_rec[0].get("partition_by"):
-            # the restored snapshot's files follow ITS layout — the
-            # spec must come back with them
-            record["partition_by"] = target_rec[0]["partition_by"]
-        if mapping:
-            # the restored files carry THEIR physical names
-            record["column_mapping"] = mapping
-        # WRITE-SIDE table properties (zone-map cols, bloom index,
-        # checkpoint cadence) are PRESERVED from the current head, not
-        # rewound: RESTORE restores the table's DATA state (Delta's
-        # RESTORE keeps current table properties too) — a restore
-        # must not silently disarm stats collection on future writes
-        for prop in ("bloom_cols", "stats_cols", "checkpoint_interval"):
-            if last.get(prop):
-                record[prop] = last[prop]
-        try:
-            _DEFAULT_ARBITER.publish(
-                _log_path(table, record["version"]), json.dumps(record)
-            )
-            _maybe_auto_checkpoint(
-                table,
-                record["version"],
-                int(record.get("checkpoint_interval", 0)),
-            )
-            return record["version"]
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # head advanced; re-resolve and republish
-    raise AssertionError("unreachable")
+        # the FULL target state comes back: its CHECK constraints (a
+        # restore across an add_constraint must not keep enforcing a
+        # rule the restored rows were never validated against), the
+        # partition spec its files follow, and their physical names.
+        # WRITE-SIDE properties (zone-map cols, bloom index,
+        # checkpoint cadence) are PRESERVED from the current head:
+        # RESTORE restores the table's DATA state (Delta's RESTORE
+        # keeps current table properties too) — a restore must not
+        # silently disarm stats collection on future writes
+        target_rec = (
+            _read_log(table, after=target - 1, through=target) or [{}]
+        )[0]
+        _carry_props(
+            record,
+            last,
+            constraints=target_rec.get("constraints"),
+            partition_by=target_rec.get("partition_by"),
+            column_mapping=mapping,
+        )
+        return _publish(table, record)
 
-
-def _constraints_at(table: str, version: int) -> dict:
-    """Active CHECK constraints as of ``version``: every commit record
-    since the feature carries the full set, so this is one log-record
-    read (empty for records predating any add_constraint)."""
-    recs = _read_log(table, after=version - 1, through=version)
-    return dict(recs[0].get("constraints", {})) if recs else {}
+    return _retry(attempt, max_retries)
 
 
 def constraints_of(table: str) -> dict:
@@ -5902,27 +5385,20 @@ def set_checkpoint_interval(
     every = int(every)
     if every < 0:
         raise ValueError(f"checkpoint interval must be >= 0, got {every}")
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
         if int(head.get("checkpoint_interval", 0)) == every:
             return head["version"]  # no-op: property already active
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"set_checkpoint_interval": every},
-                dict(head.get("constraints", {})),
-                # 0 must CLEAR, not inherit: -1 sentinel is never
-                # written (the record-write gate drops falsy/negative)
-                checkpoint_interval_override=every if every else -1,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"set_checkpoint_interval": every},
+            checkpoint_interval=every,  # 0 clears (override wins)
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def set_stats_cols(
@@ -5955,7 +5431,7 @@ def set_stats_cols(
     automatic stats; existing recorded stats remain and keep pruning).
     Returns the commit version the property landed in."""
     cols = list(cols or [])
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -5987,57 +5463,43 @@ def set_stats_cols(
                     )[rel]
             if not extra and list(head.get("stats_cols", [])) == cols:
                 return head["version"]  # fully statted already
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"set_stats_cols": cols},
-                dict(head.get("constraints", {})),
-                stats_cols_override=cols,  # [] clears (override wins)
-                extra_stats=extra or None,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"set_stats_cols": cols},
+            stats_cols=cols,  # [] clears (override wins)
+            extra_stats=extra or None,
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def _republish_head(
     table: str,
     head: dict,
     meta: dict,
-    constraints: dict,
     schema_override: str | None = None,
-    mapping_override: dict | None = None,
-    partition_override: "Sequence[str] | None" = None,
-    stats_cols_override: "Sequence[str] | None" = None,
     extra_stats: dict | None = None,
-    checkpoint_interval_override: int | None = None,
+    **props,
 ) -> int:
     """Publish a METADATA-ONLY commit that re-references the head
-    snapshot's exact files with an updated constraint set — the
-    ALTER TABLE commit shape; ``schema_override`` /
-    ``mapping_override`` are the RENAME/DROP COLUMN shape (new
-    logical schema, new logical→physical map, same files);
-    ``partition_override`` is the SET PARTITION SPEC shape (new
-    active layout for future writes, same files — pass ``[]`` to
-    revert to flat). Raises :class:`CommitConflict` if the head
-    moved (callers run the optimistic retry loop)."""
+    snapshot's exact files — the ALTER TABLE commit shape. ``props``
+    override table properties (:func:`_carry_props`): ``constraints``
+    (ADD/DROP CONSTRAINT), ``column_mapping`` with ``schema_override``
+    (RENAME/DROP COLUMN: new logical schema and map, same files),
+    ``partition_by`` (SET PARTITION SPEC for future writes — ``[]``
+    reverts to flat), ``stats_cols`` and ``checkpoint_interval``.
+    Raises :class:`CommitConflict` if the head moved (callers run the
+    optimistic retry loop)."""
     files, schema, stats, sizes, dvs, mapping = _snapshot(table, head["version"])
-    if schema_override is not None:
-        schema = schema_override
-    if mapping_override is not None:
-        mapping = mapping_override
     rels = [os.path.relpath(f, table) for f in files]
-    commit_ts = _next_commit_ts(table, head)
     record = {
         "version": head["version"] + 1,
         "action": "overwrite",
         "add": rels,
-        "schema": schema,
+        "schema": schema_override or schema,
         "commit_id": uuid.uuid4().hex,
-        "ts": commit_ts,
+        "ts": _next_commit_ts(table, head),
         "meta": meta,
     }
     kept_stats = {r: stats[r] for r in rels if stats.get(r)}
@@ -6047,31 +5509,8 @@ def _republish_head(
     if kept_dvs:
         record["dv"] = _encode_dv_entries(table, kept_dvs)
     record["sizes"] = _fill_sizes(table, rels, sizes)
-    if partition_override is not None:
-        if partition_override:
-            record["partition_by"] = list(partition_override)
-    elif head.get("partition_by"):
-        record["partition_by"] = head["partition_by"]
-    if mapping:
-        record["column_mapping"] = mapping
-    if constraints:
-        record["constraints"] = constraints
-    if head.get("bloom_cols"):
-        record["bloom_cols"] = head["bloom_cols"]
-    if stats_cols_override is not None:
-        if stats_cols_override:
-            record["stats_cols"] = list(stats_cols_override)
-    elif head.get("stats_cols"):
-        record["stats_cols"] = head["stats_cols"]
-    if checkpoint_interval_override is not None:
-        # a POSITIVE override sets; zero/negative clears (the -1
-        # sentinel set_checkpoint_interval uses to mean "clear")
-        if checkpoint_interval_override > 0:
-            record["checkpoint_interval"] = int(
-                checkpoint_interval_override
-            )
-    elif head.get("checkpoint_interval"):
-        record["checkpoint_interval"] = head["checkpoint_interval"]
+    props.setdefault("column_mapping", mapping)
+    _carry_props(record, head, **props)
     if extra_stats:
         # backfilled zone maps (set_stats_cols) merge per file under
         # the snapshot's existing entries
@@ -6084,13 +5523,7 @@ def _republish_head(
                 merged[r] = cur
         if merged:
             record["stats"] = merged
-    _DEFAULT_ARBITER.publish(
-        _log_path(table, record["version"]), json.dumps(record)
-    )
-    _maybe_auto_checkpoint(
-        table, record["version"], int(record.get("checkpoint_interval", 0))
-    )
-    return record["version"]
+    return _publish(table, record)
 
 
 def set_partition_spec(
@@ -6127,7 +5560,7 @@ def set_partition_spec(
     (``user_id_bucket8``), so re-bucketing mints a new segment name
     and cross-era prunes stay conservative instead of wrong."""
     spec = list(spec or [])
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6158,19 +5591,14 @@ def set_partition_spec(
             )
         if list(head.get("partition_by", [])) == spec:
             return head["version"]  # no-op: spec already active
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"set_partition_spec": spec},
-                dict(head.get("constraints", {})),
-                partition_override=spec,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"set_partition_spec": spec},
+            partition_by=spec,
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def add_constraint(
@@ -6200,7 +5628,7 @@ def add_constraint(
 
     if not name.isidentifier():
         raise ValueError(f"constraint name {name!r} is not an identifier")
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6219,22 +5647,18 @@ def add_constraint(
                 f"{bad} existing row(s) violate it"
             )
         cons[name] = expr
-        try:
-            return _republish_head(
-                table, head, {"add_constraint": name}, cons
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue  # head advanced: re-validate the new snapshot
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table, head, {"add_constraint": name}, constraints=cons
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def drop_constraint(table: str, name: str, max_retries: int = 3) -> int:
     """ALTER TABLE ... DROP CONSTRAINT — stop enforcing ``name`` from
     the returned commit version onward (metadata-only; no data is
     read). Raises ``ValueError`` if the constraint doesn't exist."""
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6242,15 +5666,11 @@ def drop_constraint(table: str, name: str, max_retries: int = 3) -> int:
         if name not in cons:
             raise ValueError(f"no constraint {name} on {table}")
         del cons[name]
-        try:
-            return _republish_head(
-                table, head, {"drop_constraint": name}, cons
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table, head, {"drop_constraint": name}, constraints=cons
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def clone(
@@ -6325,32 +5745,26 @@ def clone(
     }
     if kept_dvs:
         record["dv"] = _encode_dv_entries(target, kept_dvs)
-    if mapping:
-        record["column_mapping"] = mapping
-    src_rec = _read_log(source, after=src_version - 1, through=src_version)
-    if src_rec and src_rec[0].get("partition_by"):
-        record["partition_by"] = src_rec[0]["partition_by"]
-    if src_rec and src_rec[0].get("constraints"):
-        record["constraints"] = src_rec[0]["constraints"]
-    # table PROPERTIES ride too — a clone that silently dropped the
-    # zone-map / bloom / checkpoint-cadence properties would stop
+    # every table property rides too — a clone that silently dropped
+    # the zone-map / bloom / checkpoint-cadence properties would stop
     # collecting stats on its very first append
-    for prop in ("bloom_cols", "stats_cols", "checkpoint_interval"):
-        if src_rec and src_rec[0].get(prop):
-            record[prop] = src_rec[0][prop]
-    _DEFAULT_ARBITER.publish(_log_path(target, 0), json.dumps(record))
-    return 0
+    src_rec = _read_log(source, after=src_version - 1, through=src_version)
+    _carry_props(record, (src_rec or [{}])[0], column_mapping=mapping)
+    return _publish(target, record)
 
 
 def _split_ddl(ddl: str) -> list[list[str]]:
     """ORDERED, case-preserving (name, type) pairs from a
-    simpleString DDL — the mutation-friendly sibling of
-    :func:`_normalize_ddl` (which sorts and lowercases for
-    comparison). Depth-aware on both bracket families, same as the
-    normalizer."""
+    simpleString DDL — a depth-aware top-level comma split (nested
+    types carry commas inside brackets); :func:`_normalize_ddl` sorts
+    and case-folds its output for comparison."""
     parts: list[str] = []
     depth, cur = 0, []
     for ch in ddl:
+        # BOTH bracket families nest commas: struct/array/map use <>,
+        # decimal(p,s) uses () — tracking only one would split
+        # decimal types at top level and let swapped scales compare
+        # equal as a scrambled multiset
         if ch in "<(":
             depth += 1
         elif ch in ">)":
@@ -6393,7 +5807,7 @@ def rename_column(
 
     if not new.isidentifier():
         raise ValueError(f"new column name {new!r} is not an identifier")
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6443,20 +5857,15 @@ def rename_column(
             else:
                 new_fields.append([n, t])
         ddl = ", ".join(f"{n} {t}" for n, t in new_fields)
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"rename_column": [old, new]},
-                dict(head.get("constraints", {})),
-                schema_override=ddl,
-                mapping_override=mapping,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"rename_column": [old, new]},
+            schema_override=ddl,
+            column_mapping=mapping,
+        )
+
+    return _retry(attempt, max_retries)
 
 
 def drop_column(table: str, name: str, max_retries: int = 3) -> int:
@@ -6468,7 +5877,7 @@ def drop_column(table: str, name: str, max_retries: int = 3) -> int:
     :func:`rename_column`; the last column cannot be dropped."""
     import re as _re
 
-    for attempt in range(max(1, max_retries)):
+    def attempt():
         head = _last_commit(table)
         if head is None:
             raise FileNotFoundError(f"{table} has no transaction log")
@@ -6501,20 +5910,15 @@ def drop_column(table: str, name: str, max_retries: int = 3) -> int:
         ddl = ", ".join(
             f"{n} {t}" for n, t in fields if n.lower() != name.lower()
         )
-        try:
-            return _republish_head(
-                table,
-                head,
-                {"drop_column": name},
-                dict(head.get("constraints", {})),
-                schema_override=ddl,
-                mapping_override=mapping,
-            )
-        except CommitConflict:
-            if attempt == max(1, max_retries) - 1:
-                raise
-            continue
-    raise AssertionError("unreachable")
+        return _republish_head(
+            table,
+            head,
+            {"drop_column": name},
+            schema_override=ddl,
+            column_mapping=mapping,
+        )
+
+    return _retry(attempt, max_retries)
 
 
 # --- bench phase clock ------------------------------------------------------

@@ -53,6 +53,10 @@ SCHEMA = "k long, g long, v long, s string"
         ("k = 5 AND k = 'x'", ({"k": (5, 5)}, {"k": [5]})),
         # same-type contradictions intersect to the empty set
         ("s = 'a' AND s = 'b'", ({"s": ("b", "a")}, {"s": []})),
+        # IS NULL is the point set {NULL}: probed against null counts
+        ("k IS NULL", ({}, {"k": [None]})),
+        # ...and no literal is NULL, so it intersects to the empty set
+        ("k IS NULL AND k = 5", ({"k": (5, 5)}, {"k": []})),
     ],
 )
 def test_sql_conjunct_constraints(spark, pred, want):

@@ -467,14 +467,28 @@ class TestBloomProperties:
     @SETTINGS
     def test_normalize_ddl_order_and_case_invariant(self, fields):
         import random
+        import re
 
         from parquet_combiner_spark.tools.txlog import _normalize_ddl
 
         ddl = ", ".join(f"{n} {t}" for n, t in fields)
         shuffled = list(fields)
         random.Random(0).shuffle(shuffled)
-        upper = ", ".join(f"{n.upper()} {t.upper()}" for n, t in shuffled)
+
+        def keywords_upper(t):
+            # every word except a nested field name (followed by ':')
+            return re.sub(r"\w+(?!\w|:)", lambda m: m.group().upper(), t)
+
+        upper = ", ".join(
+            f"{n.upper()} {keywords_upper(t)}" for n, t in shuffled
+        )
         assert _normalize_ddl(ddl) == _normalize_ddl(upper)
+        # case-exact nested names: upper-casing them too is a change
+        # exactly when the schema has nested struct fields
+        all_upper = ", ".join(f"{n.upper()} {t.upper()}" for n, t in shuffled)
+        assert (_normalize_ddl(ddl) == _normalize_ddl(all_upper)) == (
+            ":" not in ddl
+        )
         assert len(_normalize_ddl(ddl)) == len(fields)
         # perturbing any ONE type breaks equality
         n0, t0 = fields[0]

@@ -1432,20 +1432,52 @@ def test_txtable_native_stream_writer_exactly_once(spark, tmp_path):
         )  # ...but id_small is active on the table now
 
 
+def test_session_less_gates_reject_nested_case_drift(spark, tmp_path):
+    """Both session-less schema gates compare nested field names
+    case-exactly: ``publish_files`` refuses staged files whose schema
+    renames a nested field by case only, and
+    ``_is_metadata_only_republish`` classifies such an ALTER-shaped
+    record as a real schema change."""
+    from parquet_combiner_spark.tools import txlog
+
+    table = str(tmp_path / "t")
+    df = spark.createDataFrame([((1,), 7)], "s struct<A:int>, id bigint")
+    txlog.commit(df, table)
+    with pytest.raises(TypeError, match="staged schema"):
+        txlog.publish_files(table, [], "s struct<a:int>, id bigint")
+    head = txlog._last_commit(table)
+    rec = {
+        "version": head["version"] + 1,
+        "action": "overwrite",
+        "add": list(head["add"]),
+        "schema": head["schema"],
+    }
+    assert txlog._is_metadata_only_republish(table, rec)
+    rec["schema"] = "s struct<a:int>, id bigint"
+    assert not txlog._is_metadata_only_republish(table, rec)
+    # the same-case publish goes through
+    assert txlog.publish_files(table, [], "S struct<A:int>, ID bigint") == 1
+
+
 def test_normalize_ddl_nested_types():
     """The session-less DDL normalizer splits only TOP-LEVEL commas
-    (struct/array/map types carry commas inside <>), compares
-    case-insensitively, and ignores field order."""
+    (struct/array/map types carry commas inside <>), ignores field
+    order, folds the case of top-level names and type keywords, and
+    keeps the case of NESTED field names (a case-only nested rename
+    is a schema change to the case-sensitive Arrow-side reader)."""
     from parquet_combiner_spark.tools.txlog import _normalize_ddl
 
     a = _normalize_ddl(
         "id bigint, s struct<a:int,b:array<string>>, m map<string,int>"
     )
     b = _normalize_ddl(
-        "M MAP<STRING,INT>, ID BIGINT, S STRUCT<A:INT,B:ARRAY<STRING>>"
+        "M MAP<STRING,INT>, ID BIGINT, S STRUCT<a:INT,b:ARRAY<STRING>>"
     )
     assert a == b
     assert len(a) == 3
+    assert a != _normalize_ddl(
+        "M MAP<STRING,INT>, ID BIGINT, S STRUCT<A:INT,B:ARRAY<STRING>>"
+    )
     assert _normalize_ddl("id bigint") != _normalize_ddl("id int")
     # decimal's () nests a comma too: swapped scales must NOT compare
     # equal (a <>-only splitter scrambles them into the same multiset)

@@ -3372,13 +3372,14 @@ def test_merge_into_point_set_prunes_via_bloom(spark, tmp_path):
 
 
 def test_normalize_ddl_matches_empty_frame_roundtrip(spark):
-    """The r15 commit-path schema gates replaced the empty
-    ``createDataFrame([], ddl)`` round trip with the pure-Python
-    ``_normalize_ddl``; this pins the two producers equal on every
+    """The commit-path schema gates compare the pure-Python
+    ``_normalize_ddl`` of the committed DDL against the live frame's
+    ``_normalize_schema``; this pins the two producers equal on every
     type family a committed schema can carry (simpleString-generated
     DDL — nested structs/arrays/maps, decimals, the widening lattice
-    ends), so the swap can never change which appends/replaces are
-    accepted."""
+    ends, nested field names in upper case), so the gates accept
+    exactly what the empty ``createDataFrame([], ddl)`` round trip
+    accepts."""
     from parquet_combiner_spark.tools.txlog import (
         _normalize_ddl,
         _normalize_schema,
@@ -3391,6 +3392,11 @@ def test_normalize_ddl_matches_empty_frame_roundtrip(spark):
         "s struct<a:int,b:array<string>>, m map<string,bigint>",
         "arr array<struct<k:string,v:double>>, f float, t tinyint",
         "B BIGINT, a STRING",  # TOP-LEVEL case folds identically
+        # NESTED field names keep their case, in every nesting shape
+        "s struct<A:int,B:string>, id bigint",
+        "arr array<struct<Key:string,v:decimal(5,1)>>",
+        "m map<string,struct<X:int,y:array<struct<Z:bigint>>>>",
+        "S STRUCT<Inner:STRUCT<Deep:INT>>",
     ]
     for ddl in ddls:
         assert _normalize_ddl(ddl) == _normalize_schema(
@@ -3399,32 +3405,30 @@ def test_normalize_ddl_matches_empty_frame_roundtrip(spark):
 
 
 def test_schema_gate_nested_case_roundtrip(spark):
-    """ADVICE r15 high: ``_normalize_ddl`` lowercases the whole type
-    string while ``simpleString`` preserves NESTED field-name case, so
-    the two are NOT equivalent on ``struct<A:int>`` — the commit-path
-    gates must therefore compare ``_normalize_ddl_rt`` (memoized
-    round trip) against ``_normalize_schema``, never ``_normalize_ddl``
-    against ``_normalize_schema``. Pins (a) the divergence that made
-    the r15 gate wrong, (b) the rt gate accepting an identical nested
-    uppercase schema, (c) the rt gate REJECTING a case-only
-    nested-name change (the Arrow-side reader matches nested names
-    case-sensitively)."""
+    """ADVICE r15 high / r16: ``simpleString`` preserves NESTED
+    field-name case and the Arrow-side txtable reader matches nested
+    names case-sensitively, so the schema gates' ``_normalize_ddl``
+    must too. Pins (a) the normalizer agreeing with the frame on a
+    nested uppercase schema, (b) a case-only nested-name change
+    comparing UNEQUAL, (c) top-level names still folding."""
     from parquet_combiner_spark.tools.txlog import (
         _normalize_ddl,
-        _normalize_ddl_rt,
         _normalize_schema,
     )
 
     upper = "s struct<A:int,B:string>, id bigint"
     lower = "s struct<a:int,b:string>, id bigint"
     df_upper = spark.createDataFrame([], upper)
-    # (a) the bug: all-lowering normalize disagrees with the frame
-    assert _normalize_ddl(upper) != _normalize_schema(df_upper)
-    # (b) the fixed gate: round trip matches the identical frame
-    assert _normalize_ddl_rt(spark, upper) == _normalize_schema(df_upper)
-    # (c) case-only nested drift stays REJECTED, as pre-r15
-    assert _normalize_ddl_rt(spark, upper) != _normalize_schema(
+    # (a) the case-exact rule: nested names kept, frame agrees
+    assert _normalize_ddl(upper) == _normalize_schema(df_upper)
+    # (b) case-only nested drift stays REJECTED
+    assert _normalize_ddl(upper) != _normalize_schema(
         spark.createDataFrame([], lower)
+    )
+    assert _normalize_ddl(upper) != _normalize_ddl(lower)
+    # (c) top-level case still folds
+    assert _normalize_ddl("S struct<A:int,B:string>, ID bigint") == (
+        _normalize_ddl(upper)
     )
 
 
@@ -3466,3 +3470,72 @@ def test_struct_of_and_conjunct_caches_are_value_safe(spark):
     assert points2["id"] == [1, 2, 3]
     assert bands2["v"] == (0.5, float("inf"))
     assert points2["s"] == ["x"]
+
+
+def test_conjunct_cache_evicts_least_recently_used(spark, monkeypatch):
+    """A stream of one-off predicates (GDPR deletes with unique
+    IN-lists) must not evict a hot entry that keeps being read: the
+    cache is LRU, not FIFO. The Catalyst extraction is stubbed so the
+    4,096 inserts stay cheap; the stub counts recomputations."""
+    from parquet_combiner_spark.tools import txlog
+
+    calls = []
+
+    def fake(spark, schema, predicate):
+        calls.append(predicate)
+        return {}, {}
+
+    monkeypatch.setattr(txlog, "_CONJUNCT_CACHE", {})
+    monkeypatch.setattr(txlog, "_sql_conjunct_constraints_uncached", fake)
+    ddl = "k bigint"
+    txlog._sql_conjunct_constraints(spark, ddl, "hot")
+    n = txlog._CONJUNCT_CACHE_MAX
+    for i in range(n):
+        txlog._sql_conjunct_constraints(spark, ddl, f"k IN ({i})")
+        if i == n // 2:
+            txlog._sql_conjunct_constraints(spark, ddl, "hot")  # a hit
+    assert len(txlog._CONJUNCT_CACHE) == n
+    assert (ddl, "hot") in txlog._CONJUNCT_CACHE
+    assert (ddl, "k IN (0)") not in txlog._CONJUNCT_CACHE  # the LRU one
+    assert calls.count("hot") == 1
+
+
+def test_conjunct_cache_threaded_hits_and_evictions(spark, monkeypatch):
+    """Hits reorder the shared cache, so concurrent readers and
+    inserters must neither raise nor overflow it."""
+    import sys
+    import threading
+
+    from parquet_combiner_spark.tools import txlog
+
+    monkeypatch.setattr(txlog, "_CONJUNCT_CACHE", {})
+    monkeypatch.setattr(txlog, "_CONJUNCT_CACHE_MAX", 64)
+    monkeypatch.setattr(
+        txlog, "_sql_conjunct_constraints_uncached", lambda *a: ({}, {})
+    )
+    errors = []
+
+    def work(w):
+        try:
+            for i in range(2000):
+                txlog._sql_conjunct_constraints(
+                    spark, "k bigint", f"p{(w * 7 + i) % 200}"
+                )
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=work, args=(w,)) for w in range(8)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(txlog._CONJUNCT_CACHE) <= 64

@@ -11,7 +11,13 @@ probes). The tables are built once with deliberately adversarial
 layouts: interleaved keys (envelopes span everything), zero-padded
 string keys under a bucket transform + bloom sidecars, and a
 decimal-keyed bucket layout whose path rendering ('42.00') never
-matches str(42)."""
+matches str(42), plus a nullable column whose NULLs sit in a few files
+only (null-count pruning).
+
+The four shape readers (`read_table_pruned`, `_multi`, `_in`,
+`_null_pruned`) are adapters over the same prune: each must return
+exactly the filtered snapshot and keep no file that `read_table_where`
+prunes on the equivalent SQL predicate."""
 
 from __future__ import annotations
 
@@ -31,19 +37,24 @@ pytestmark = pytest.mark.txlifecycle
 def tables(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("whereprop")
     rows = [
-        Row(ik=i, sk=f"{i % 60:03d}", dk=f"{i % 25}.00", v=float(i))
+        Row(
+            ik=i, sk=f"{i % 60:03d}", dk=f"{i % 25}.00", v=float(i),
+            nk=None if i % 60 < 10 else i,  # NULL iff sk < '010'
+        )
         for i in range(200)
     ]
     df = spark.createDataFrame(
-        rows, "ik long, sk string, dk string, v double"
-    ).selectExpr("ik", "sk", "cast(dk as decimal(10,2)) as dk", "v")
+        rows, "ik long, sk string, dk string, v double, nk long"
+    ).selectExpr(
+        "ik", "sk", "cast(dk as decimal(10,2)) as dk", "v", "nk"
+    )
     # A: string-bucketed layout, bloom + stats on the int key,
     # interleaved so zone envelopes span everything
     a = str(root / "a")
     txlog.commit(
         df.repartition(8, "sk"), a,
         partition_by=["bucket(4, sk)"],
-        stats_cols=["ik", "sk"],
+        stats_cols=["ik", "sk", "nk"],
         bloom_cols={"ik": 1000, "sk": 1000},
     )
     # B: decimal-bucketed layout (the '42.00'-rendering hazard)
@@ -51,7 +62,7 @@ def tables(spark, tmp_path_factory):
     txlog.commit(
         df.repartition(8, "ik"), b,
         partition_by=["bucket(4, dk)"],
-        stats_cols=["ik"],
+        stats_cols=["ik", "nk"],
     )
     return a, b
 
@@ -70,7 +81,7 @@ def _predicate(draw):
             st.sampled_from(
                 ["ik_eq", "ik_in", "ik_between", "ik_ge",
                  "sk_eq", "sk_in", "sk_eq_int", "dk_eq", "dk_in",
-                 "v_lt"]
+                 "v_lt", "nk_null", "nk_eq"]
             )
         )
         if kind == "ik_eq":
@@ -103,6 +114,10 @@ def _predicate(draw):
                 st.lists(st.integers(0, 30), min_size=1, max_size=4)
             )
             return f"dk IN ({', '.join(map(str, vals))})"
+        if kind == "nk_null":
+            return "nk IS NULL"
+        if kind == "nk_eq":
+            return f"nk = {draw(_INT)}"
         return f"v < {draw(st.integers(-5, 220))}.5"
 
     return " AND ".join(atom() for _ in range(draw(st.integers(1, 3))))
@@ -130,3 +145,81 @@ def test_read_table_where_never_drops_matching_rows(
         txlog.read_table(spark, table).where(pred).collect()
     )
     assert got == want, (table, pred)
+
+
+def _sql_lit(v):
+    return f"'{v}'" if isinstance(v, str) else str(v)
+
+
+@st.composite
+def _shape(draw):
+    """(reader name, reader arguments, equivalent SQL predicate) for
+    one of the four shape readers."""
+    kind = draw(st.sampled_from(["pruned", "multi", "in", "null"]))
+    if kind == "null":
+        return "read_table_null_pruned", ("nk",), "nk IS NULL"
+    if kind == "in":
+        col, vals = draw(
+            st.one_of(
+                st.tuples(
+                    st.just("ik"),
+                    st.lists(st.one_of(_INT, st.none()), max_size=6),
+                ),
+                # mixed-type lists probe each value on its own
+                st.tuples(
+                    st.just("sk"),
+                    st.lists(
+                        st.one_of(_STR, st.integers(0, 65)), max_size=5
+                    ),
+                ),
+            )
+        )
+        lits = [_sql_lit(v) for v in vals if v is not None]
+        sql = f"{col} IN ({', '.join(lits)})" if lits else "false"
+        return "read_table_pruned_in", (col, vals), sql
+    bands = {}
+    for col in draw(
+        st.lists(
+            st.sampled_from(["ik", "sk", "v"]),
+            min_size=1,
+            max_size=1 if kind == "pruned" else 3,
+            unique=True,
+        )
+    ):
+        a, b = draw(_STR if col == "sk" else _INT), draw(
+            _STR if col == "sk" else _INT
+        )
+        bands[col] = (min(a, b), max(a, b))
+    sql = " AND ".join(
+        f"{c} BETWEEN {_sql_lit(lo)} AND {_sql_lit(hi)}"
+        for c, (lo, hi) in bands.items()
+    )
+    if kind == "pruned":
+        [(col, (lo, hi))] = bands.items()
+        return "read_table_pruned", (col, lo, hi), sql
+    return "read_table_pruned_multi", (bands,), sql
+
+
+@given(shape=_shape(), which=st.sampled_from([0, 1]))
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.too_slow,
+        HealthCheck.function_scoped_fixture,
+    ],
+)
+def test_shape_readers_match_read_table_where(spark, tables, shape, which):
+    table = tables[which]
+    reader, args, sql = shape
+    got = getattr(txlog, reader)(spark, table, *args)
+    want = txlog.read_table(spark, table).where(sql)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    ), (table, reader, args)
+    kept = set(got.inputFiles())
+    where_kept = set(txlog.read_table_where(spark, table, sql).inputFiles())
+    assert kept <= where_kept, (table, reader, args, sql)
+    if reader == "read_table_null_pruned":
+        # the IS NULL shape IS read_table_where's: identical pruning
+        assert kept == where_kept
